@@ -36,6 +36,7 @@ from smqtk_indexing_spark.operators.signatures import (
 )
 from smqtk_indexing_spark.operators.substrings import substring_pairs
 from smqtk_indexing_spark.operators.verify import verify_pairs
+from smqtk_indexing_spark.session import python_stage_width
 
 CFG = DedupConfig()
 K = CFG.shingle_k
@@ -217,7 +218,11 @@ def _lsh_pairs(spark, sf_dir, materialize: bool = True):
     # the hybrid generator + ranked checkpoint stage). Measured at sf1.0
     # local[32]: candidate stage 3.5 s -> ~1 s, query 5.9 s -> ~3.7 s.
     sh = None
-    cand = candidate_pairs_local(buckets, CFG)
+    # (plan capture runs no count job; the width is then one task per core)
+    n_docs = _docs_count(spark, sf_dir) if materialize else None
+    cand = candidate_pairs_local(
+        buckets, CFG, rows=None if n_docs is None else n_docs * CFG.bands
+    )
     if materialize:
         cand = cand.persist()
     try:
@@ -239,17 +244,13 @@ def _lsh_pairs(spark, sf_dir, materialize: bool = True):
         # (9.0 s -> 1.8 s); at driver-query SF the pass is ~0.3 s and the
         # extra eager jobs cost more than the race loses (A/B measured:
         # lazy 2.6 s vs eager 3.1 s per query).
-        if not materialize or _docs_count(spark, sf_dir) <= CFG.broadcast_id_cap:
+        if n_docs is None or n_docs <= CFG.broadcast_id_cap:
             # (plan capture takes the broadcast branch without the count job)
             cand_docs = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
         else:
-            width = max(
-                CFG.shuffle_partitions,
-                2 * spark.sparkContext.defaultParallelism,
-            )
             cand_docs = docs.join(
                 cand_ids.hint("shuffle_hash"), "doc_id", "left_semi"
-            ).repartition(width)
+            ).repartition(python_stage_width(spark, n_docs))
         sh = compute_shingle_arrays(cand_docs, CFG)
         if materialize:
             sh = sh.persist()

@@ -48,6 +48,8 @@ def main() -> None:
         else:
             names.append(a)
             i += 1
+    if repeats < 1:
+        raise SystemExit(f"--repeats must be >= 1, got {repeats}")
     if not names:
         names = [
             "near_dup_pairs_lsh",

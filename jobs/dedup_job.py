@@ -61,7 +61,6 @@ def main(argv=None) -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
         .getOrCreate()
     )
     files = spark.read.parquet(args.input)

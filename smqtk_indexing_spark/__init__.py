@@ -7,6 +7,9 @@ CDC/suffix-array substring pass.
 """
 
 from smqtk_indexing_spark.config import DEFAULT_CONFIG, DedupConfig
+from smqtk_indexing_spark.session import skip_unchanged_zip_rereads
+
+skip_unchanged_zip_rereads()
 
 __all__ = ["DedupConfig", "DEFAULT_CONFIG"]
 __version__ = "0.1.0"

@@ -45,7 +45,6 @@ class DedupConfig:
     # to the brute-force SQL. 0 disables.
     minhash_prefilter: float = 0.5
     # --- skew / scale ---
-    max_bucket_pairs_per_task: int = 5_000_000  # salt blocks above this
     salt_block_rows: int = 1024   # target member-rows per salted block
     bucket_cap: int = 100_000     # drop pathological buckets larger than this
     # candidate topology: "all" = every co-bucketed pair (exact pair-set
@@ -95,8 +94,6 @@ class DedupConfig:
     # drift. The r07 production substring query passes df_cap=None
     # explicitly (uncapped: identical domain to the all-interior join).
     rarest_df_cap: int = 10_000
-    # --- misc ---
-    shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
@@ -111,6 +108,16 @@ class DedupConfig:
     @classmethod
     def from_json(cls, s: str) -> "DedupConfig":
         return cls(**json.loads(s))
+
+    @property
+    def shuffle_partitions(self) -> int:
+        """The former ``shuffle_partitions`` field's default, read-only.
+
+        No engine code reads it: Python stages are sized by
+        ``session.python_stage_width``. It stays for the benchmark's
+        pipeline replay (perfbench/workloads.py), which still names it.
+        """
+        return 32
 
     @property
     def config_hash(self) -> str:

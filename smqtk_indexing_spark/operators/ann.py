@@ -43,14 +43,41 @@ def _ranked(
     )
 
 
-def _self_pairs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    a = emb.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vb"))
-    # broadcast the corpus side: the scan parallelizes over the query side's
-    # partitions instead of a (n_part x n_part) cartesian
-    return a.crossJoin(F.broadcast(b)).where(
-        F.col("query_id") != F.col("neighbor_id")
+# int64 sort keys of _order_keys: a NaN score sorts after +inf (ASC) or
+# before every score (DESC), and a query's own entry after everything
+_NAN_LAST = np.int64(0x7FF0000000000001)  # one above +inf's bit pattern
+_NAN_FIRST = np.iinfo(np.int64).min
+_SELF_LAST = np.iinfo(np.int64).max
+
+
+def _nan_restored(col: str) -> Column:
+    """``col`` with NaN put back where the boolean ``{col}_nan`` is set.
+
+    mapInPandas converts float NaN to null on the way into Arrow, so a
+    kernel that must emit NaN (what the Catalyst expression it replaces
+    gives) ships the flag next to the value."""
+    return (
+        F.when(F.col(f"{col}_nan"), F.lit(float("nan")))
+        .otherwise(F.col(col))
+        .alias(col)
     )
+
+
+def _order_keys(sc: np.ndarray, ascending: bool) -> np.ndarray:
+    """int64 keys whose ascending order is Spark's ``ORDER BY score ASC``
+    (or ``DESC``) with NaN greatest: NaN last under ASC, first under DESC.
+
+    Float keys cannot hold that order next to real infinities (a NaN
+    sentinel of +inf ties a +inf score), so the float's bit pattern is
+    mapped to an integer of the same order — negative floats have their
+    magnitude bits flipped — which leaves room above +inf and below -inf.
+    Adding 0.0 first folds -0.0 into 0.0, which Spark orders as equal.
+    """
+    f = (sc if ascending else -sc) + 0.0
+    bits = f.view(np.int64)
+    key = np.where(bits < 0, bits ^ np.int64(0x7FFFFFFFFFFFFFFF), bits)
+    key[np.isnan(sc)] = _NAN_LAST if ascending else _NAN_FIRST
+    return key
 
 
 def _bruteforce_topk_blocked(
@@ -82,9 +109,10 @@ def _bruteforce_topk_blocked(
     seq_self_norms, which reproduce the Catalyst fold's IEEE rounding
     sequence bit-for-bit (see that docstring), so ranks, 6-decimal rounded
     scores, and tie-breaks (score order, then neighbor_id asc — NaN scores
-    sort as Spark's NaN-greatest) are unchanged. Verified by exact
-    old-vs-new rowset equality at sf0.001/0.01/0.1/1.0 and the DuckDB
-    oracle gate (OPTIMIZATION_r07.md).
+    sort as Spark's NaN-greatest, see :func:`_order_keys`) are unchanged,
+    and a query is never its own neighbor, even with fewer than k non-NaN
+    scores. Verified by exact old-vs-new rowset equality at
+    sf0.001/0.01/0.1/1.0 and the DuckDB oracle gate (OPTIMIZATION_r07.md).
 
     This is the O(n^2) correctness baseline by design (the certified scale
     paths are rp_lsh/ivf/mrpt); the corpus matrix must fit one executor,
@@ -142,12 +170,10 @@ def _bruteforce_topk_blocked(
                     sc = K.seq_score_block(q, xm[ts:te], measure)
                     if measure == "cosine":
                         sc = sc / (nq[:, None] * nx[ts:te][None, :])
-                    # ascending sort key; Spark orders NaN greatest (=>
-                    # first under desc, last under asc); ties break on
-                    # neighbor_id asc via the stable sorts
-                    key = sc.copy() if ascending else -sc
-                    key[np.isnan(key)] = np.inf if ascending else -np.inf
-                    key[qids[:, None] == cids[ts:te][None, :]] = np.inf
+                    # ties break on neighbor_id asc via the stable sorts;
+                    # the query itself sorts after every neighbor
+                    key = _order_keys(sc, ascending)
+                    key[qids[:, None] == cids[ts:te][None, :]] = _SELF_LAST
                     kk2 = min(kk, te - ts)
                     ordt = np.argsort(key, axis=1, kind="stable")[:, :kk2]
                     pool_k.append(key[rows, ordt])
@@ -157,6 +183,7 @@ def _bruteforce_topk_blocked(
                 scs = np.concatenate(pool_s, axis=1)
                 nids = np.concatenate(pool_i, axis=1)
                 ordf = np.argsort(keys, axis=1, kind="stable")[:, :kk]
+                score = scs[rows, ordf].ravel()
                 yield pd.DataFrame(
                     {
                         "query_id": np.repeat(qids, kk),
@@ -164,15 +191,21 @@ def _bruteforce_topk_blocked(
                         "rank": np.tile(
                             np.arange(1, kk + 1, dtype=np.int32), m
                         ),
-                        "score": scs[rows, ordf].ravel(),
+                        "score": score,
+                        "score_nan": np.isnan(score),
                     }
                 )
 
     out = base.mapInPandas(
-        gen, schema="query_id long, neighbor_id long, rank int, score double"
+        gen,
+        schema="query_id long, neighbor_id long, rank int, score double, "
+        "score_nan boolean",
     )
     return out.select(
-        "query_id", "neighbor_id", "rank", F.round("score", 6).alias("score")
+        "query_id",
+        "neighbor_id",
+        "rank",
+        F.round(_nan_restored("score"), 6).alias("score"),
     )
 
 
@@ -397,13 +430,18 @@ def _pair_cosines_bcast(
             acc = np.zeros(len(a))
             for j in range(d):
                 acc += va[j] * vb[j]
-            yield pd.DataFrame(
-                {ca: a, cb: bb, "cos": acc / (ns[ia] * ns[ib])}
-            )
+            cos = acc / (ns[ia] * ns[ib])
+            yield pd.DataFrame({ca: a, cb: bb, "cos": cos, "cos_nan": np.isnan(cos)})
 
-    return cand.select(
-        F.col(ca).cast("long").alias(ca), F.col(cb).cast("long").alias(cb)
-    ).mapInPandas(gen, schema=f"{ca} long, {cb} long, cos double")
+    return (
+        cand.select(
+            F.col(ca).cast("long").alias(ca), F.col(cb).cast("long").alias(cb)
+        )
+        .mapInPandas(
+            gen, schema=f"{ca} long, {cb} long, cos double, cos_nan boolean"
+        )
+        .select(ca, cb, _nan_restored("cos"))
+    )
 
 
 def cosine_dup_pairs(
@@ -658,23 +696,20 @@ def rp_lsh_topk(
     collapse such boilerplate; the drop profile is observable via
     ``candidates.bucket_stats`` on the bucket table).
 
-    Candidate generation reuses the dedup path's hybrid generator
-    (``candidates.candidate_pairs``; round-3 VERDICT item 1): small
-    buckets go through a window-rank co-partitioned self-join (codegen,
-    one exchange), and buckets above ``salt_block_rows`` are striped into
-    salted block pairs spread over the whole cluster — the previous
-    in-row explode emitted a giant bucket's ~m^2 candidate rows from ONE
-    row, which no task split can parallelize. Pairs come back undirected
-    (a < b), so each cosine is computed ONCE and then emitted in both
-    (query, neighbor) directions before ranking — halving the re-rank
-    arithmetic vs the directed-candidate shape.
+    Candidate generation is the all-mode generator of the
+    ``__spark_entry__`` queries, ``candidates.candidate_pairs_local``: one
+    bucket-key exchange and a per-partition kernel. Buckets above
+    ``salt_block_rows`` are striped into salted block pairs spread over
+    the whole cluster, so no single row or task enumerates a giant
+    bucket's ~m^2 pairs (isolated A/B at the 20k-vector bench corpus
+    against the hybrid ``candidate_pairs``: cand stage 4.4 s -> ~1.5 s,
+    identical pair sets). Pairs come back undirected (a < b), so each
+    cosine is computed ONCE and then emitted in both (query, neighbor)
+    directions before ranking — halving the re-rank arithmetic vs the
+    directed-candidate shape.
 
-    r07: candidates come from ``candidates.candidate_pairs_local`` — one
-    bucket-key exchange + a per-partition kernel with the same
-    small/salted-giant split (see that docstring; pair sets identical,
-    isolated A/B at the 20k-vector bench corpus: cand stage 4.4 s ->
-    ~1.5 s) — and with ``materialize`` (default) the (n*k)-row result is
-    checkpointed eagerly so certificate consumers' repeat actions reuse it.
+    With ``materialize`` (default) the (n*k)-row result is checkpointed
+    eagerly so certificate consumers' repeat actions reuse it.
     ``materialize=False`` keeps the plan fully lazy for plan capture."""
     from smqtk_indexing_spark.operators.candidates import candidate_pairs_local
 

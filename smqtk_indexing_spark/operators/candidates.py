@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from smqtk_indexing_spark.config import DedupConfig
+from smqtk_indexing_spark.session import python_stage_width
 
 
 def band_buckets(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -84,6 +85,7 @@ def candidate_pairs_local(
     buckets: DataFrame,
     cfg: DedupConfig,
     salt_threshold: int | None = None,
+    rows: int | None = None,
 ) -> DataFrame:
     """All-mode candidate pairs via ONE bucket-key exchange + a
     per-partition kernel — the r07 generator for the driver-query paths
@@ -109,12 +111,18 @@ def candidate_pairs_local(
     Measured at the 50k-doc bench corpus (local[32], warm): the
     near_dup_pairs_lsh candidate stage (ranked persist + hybrid) 3.5 s ->
     ~1 s; pair sets identical at every SF.
+
+    Memory: each kernel task buffers its whole hash partition, so the
+    width comes from ``session.python_stage_width``. Pass ``rows`` (the
+    bucket-table row count) when it is known: the width then grows so no
+    task holds more than ``PYTHON_STAGE_ROWS_PER_TASK`` rows. Without it
+    the width is one task per core, which bounds the path to the
+    query-table scale it serves; the pipeline keeps the streaming hybrid
+    generator.
     """
     salt = salt_threshold or cfg.salt_block_rows
     cap = cfg.bucket_cap
-    width = max(
-        cfg.shuffle_partitions, buckets.sparkSession.sparkContext.defaultParallelism
-    )
+    width = python_stage_width(buckets.sparkSession, rows)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pdfs = list(batches)
@@ -311,12 +319,7 @@ def candidate_pairs(
         # spread giant buckets' work over the WHOLE cluster: width follows
         # the session's actual parallelism, not a fixed config constant
         # (round-1 VERDICT item 8)
-        .repartition(
-            max(
-                cfg.shuffle_partitions,
-                buckets.sparkSession.sparkContext.defaultParallelism,
-            )
-        )
+        .repartition(python_stage_width(buckets.sparkSession))
     )
     gx = F.explode("ba").alias("x")
     giant_pairs = (

@@ -39,6 +39,7 @@ from smqtk_indexing_spark.operators.signatures import (
 )
 from smqtk_indexing_spark.operators.substrings import substring_pairs
 from smqtk_indexing_spark.operators.verify import verify_pairs
+from smqtk_indexing_spark.session import python_stage_width
 
 LINEAGE_SCHEMA = (
     "stage string, rows_out long, n_partitions int, wall_ms long, "
@@ -260,11 +261,13 @@ def run_dedup(
         # repartition (scan splits already give several waves per core,
         # session.py maxPartitionBytes). Above the cap: shuffle-hash join
         # (build side = ids, content side never sorted; SMJ would
-        # sort/spill it) + a core-count repartition, because UDF stages
-        # need partition counts that follow CORES, not bytes — the
-        # semi-join output's byte-sized partitioning starves / skews the
-        # Arrow pass (measured round 4 at local[8]: 9.3 s on the join's
-        # 16 partitions vs 4.3 s repartitioned to 4 waves per core).
+        # sort/spill it) + a repartition to python_stage_width (one task
+        # per core, more once the corpus passes its per-task row bound),
+        # because UDF stages need partition counts that follow CORES, not
+        # bytes — the semi-join output's byte-sized partitioning starves /
+        # skews the Arrow pass (measured round 4 at local[8]: 9.3 s on the
+        # join's 16 partitions vs 4.3 s repartitioned to 4 waves per core;
+        # the single wave has not been measured at that scale).
         n_docs = next(
             (row[1] for row in res.lineage if row[0] == "member_map"), None
         )
@@ -273,13 +276,9 @@ def run_dedup(
                 F.broadcast(cand_ids), "doc_id", "left_semi"
             )
         else:
-            width = max(
-                cfg.shuffle_partitions,
-                4 * spark.sparkContext.defaultParallelism,
-            )
             cand_docs = base.join(
                 cand_ids.hint("shuffle_hash"), "doc_id", "left_semi"
-            ).repartition(width)
+            ).repartition(python_stage_width(spark, n_docs))
         # Materialization boundary between the content exchange and the
         # Arrow shingle pass (round-2 VERDICT item 4): fused, the stage
         # runs every core's JVM shuffle task AND its python worker

@@ -12,6 +12,66 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Rows one Python task may take before python_stage_width adds tasks
+# beyond one per core. candidate_pairs_local holds its whole partition:
+# ~110 B a row with its input batches, sort copies and output (tracemalloc
+# on a synthetic 250k-row partition), so this keeps one task near 28 MB.
+PYTHON_STAGE_ROWS_PER_TASK = 250_000
+
+
+def python_stage_width(spark: SparkSession, rows: int | None = None) -> int:
+    """Partition count for a Python (mapInPandas) stage: one task per core.
+
+    Every Python task pays a fixed start-up cost in its worker, so extra
+    waves of small tasks only add that cost. The width grows past the core
+    count only when the caller knows ``rows`` and one task per core would
+    exceed ``PYTHON_STAGE_ROWS_PER_TASK``.
+    """
+    width = spark.sparkContext.defaultParallelism
+    if rows is not None:
+        width = max(width, -(-rows // PYTHON_STAGE_ROWS_PER_TASK))
+    return width
+
+
+def skip_unchanged_zip_rereads() -> None:
+    """Inside a Spark Python worker, stop ``importlib.invalidate_caches()``
+    from re-reading zip archives that did not change.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task, and on CPython 3.11 each cached ``zipimporter`` then parses
+    its archive's whole central directory again. A warm worker holds
+    importers on pyspark.zip, py4j and the Spark jar (about 27k entries),
+    which costs ~0.2 s per task. After this, an importer re-reads its
+    archive only when the archive's ``(st_mtime_ns, st_size)`` differs from
+    what that importer saw at its last read. Outside a worker, and on a
+    second call, it does nothing.
+    """
+    import zipimport
+
+    from pyspark import TaskContext
+
+    cls = zipimport.zipimporter
+    if TaskContext.get() is None or getattr(
+        cls.invalidate_caches, "_skips_unchanged", False
+    ):
+        return
+    reread = cls.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is not None and self.__dict__.get("_read_stamp") == stamp:
+            return
+        # stamp taken before the read: a write racing it shows up next call
+        reread(self)
+        self._read_stamp = stamp
+
+    invalidate_caches._skips_unchanged = True
+    cls.invalidate_caches = invalidate_caches
+
 
 def get_spark(
     app_name: str = "smqtk_indexing_spark",

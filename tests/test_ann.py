@@ -109,6 +109,73 @@ def test_blocked_topk_matches_crossjoin_window_plan(spark, emb):
     assert old == new
 
 
+@pytest.fixture(scope="module")
+def emb_nonfinite(spark):
+    # finite vectors plus NaN, +inf and -inf components, and exact
+    # duplicates (score ties); no zero vector (cosine would divide by 0)
+    rng = np.random.default_rng(17)
+    vecs = rng.standard_normal((14, 4))
+    vecs[3] = vecs[2]
+    vecs[4, 1] = np.nan
+    vecs[5] = np.nan
+    vecs[6, 0] = np.inf
+    vecs[7, 2] = -np.inf
+    vecs[8, :2] = np.inf
+    vecs[9] = vecs[6]
+    vecs[10, 3] = np.nan
+    vecs[10, 0] = np.inf
+    rows = [(i, vecs[i].tolist()) for i in range(len(vecs))]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _rows_nan_safe(df):
+    # NaN != NaN: compare NaN scores by a marker
+    return sorted(
+        (q, nb, rk, "nan" if sc != sc else sc) for q, nb, rk, sc in df.collect()
+    )
+
+
+@pytest.mark.parametrize("k", [3, 13, 20])
+@pytest.mark.parametrize("measure", ["cosine", "euclidean", "hik"])
+def test_blocked_topk_nonfinite_and_k_ge_n_match_crossjoin(
+    spark, emb_nonfinite, measure, k
+):
+    # Spark orders NaN greatest (last under ASC, first under DESC) and
+    # above +inf; a query never ranks itself, even with fewer than k
+    # non-NaN scores; k >= n gives all n-1 neighbors.
+    from pyspark.sql import functions as F2
+
+    from smqtk_indexing_spark.functions import metrics as M
+
+    df = emb_nonfinite
+    a = df.select(F2.col("vec_id").alias("query_id"), F2.col("embedding").alias("va"))
+    b = df.select(
+        F2.col("vec_id").alias("neighbor_id"), F2.col("embedding").alias("vb")
+    )
+    p = a.crossJoin(F2.broadcast(b)).where(
+        F2.col("query_id") != F2.col("neighbor_id")
+    )
+    score, ascending, blocked = {
+        "cosine": (M.cosine_similarity("va", "vb"), False, ann.cosine_topk),
+        "euclidean": (M.euclidean_distance("va", "vb"), True, ann.euclidean_topk),
+        "hik": (M.histogram_intersection_distance("va", "vb"), True, ann.hik_topk),
+    }[measure]
+    want = _rows_nan_safe(ann._ranked(p, score, k, ascending))
+    got = _rows_nan_safe(blocked(df, k=k))
+    assert got == want
+    assert all(q != nb for q, nb, _, _ in got)
+    assert len(got) == 14 * min(k, 13)
+
+
+def test_order_keys_spark_order():
+    sc = np.array([np.nan, np.inf, -np.inf, 0.0, -0.0, 1.5, -2.0])
+    asc = np.argsort(ann._order_keys(sc, True), kind="stable")
+    desc = np.argsort(ann._order_keys(sc, False), kind="stable")
+    assert asc.tolist() == [2, 6, 3, 4, 5, 1, 0]
+    assert desc.tolist() == [0, 1, 5, 3, 4, 6, 2]
+    assert ann._order_keys(sc, True).max() < ann._SELF_LAST
+
+
 def test_pair_cosines_bcast_matches_catalyst(spark, emb):
     # r07: the broadcast-matrix pair scorer (rp_lsh re-rank) must be
     # bit-identical to the joined-array Catalyst cosine on the same pairs.
@@ -461,3 +528,30 @@ def test_cosine_dup_pairs_banded_recall(spark):
     assert banded <= brute
     assert len(brute) >= 40  # planted pairs present
     assert len(banded) >= 0.99 * len(brute)
+
+
+def test_pair_cosines_bcast_nonfinite_matches_catalyst(spark, emb_nonfinite):
+    # NaN cosines stay NaN (not null) through the mapInPandas boundary
+    from pyspark.sql import functions as F2
+
+    from smqtk_indexing_spark.functions import metrics as M
+
+    df = emb_nonfinite
+    ids = df.select("vec_id")
+    cand = ids.select(F2.col("vec_id").alias("a")).crossJoin(
+        ids.select(F2.col("vec_id").alias("b"))
+    ).where(F2.col("a") < F2.col("b"))
+    v = df.select(F2.col("vec_id").alias("did"), F2.col("embedding").alias("v"))
+    old = (
+        cand.join(v.select(F2.col("did").alias("a"), F2.col("v").alias("va")), "a")
+        .join(v.select(F2.col("did").alias("b"), F2.col("v").alias("vb")), "b")
+        .select("a", "b", M.cosine_similarity("va", "vb").alias("cos"))
+    )
+    new = ann._pair_cosines_bcast(cand, df)
+
+    def rows(d):
+        return sorted((a, b, "nan" if c != c else c) for a, b, c in d.collect())
+
+    got = rows(new)
+    assert got == rows(old)
+    assert any(c == "nan" for _, _, c in got)

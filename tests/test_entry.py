@@ -73,3 +73,28 @@ def test_fast_queries_match_duckdb_sf0001(spark, name, sf001_dir):
 
     assert sorted(cols) == sorted(ocols)
     assert norm(cols, rows) == norm(ocols, orows)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_candidate_width_does_not_change_pairs(spark, monkeypatch, sf, sf001_dir):
+    # candidate_pairs_local used max(32, cores) tasks; python_stage_width
+    # gives one per core. The pair and top-k sets must not depend on it.
+    import os
+
+    from smqtk_indexing_spark.operators import ann, candidates
+
+    sf_dir = os.path.join(os.path.dirname(sf001_dir), sf)
+
+    def build():
+        pairs = E._lsh_pairs(spark, sf_dir, materialize=False)
+        topk = ann.rp_lsh_topk(E._emb(spark, sf_dir), k=E.TOPK, materialize=False)
+        return (
+            sorted(map(tuple, pairs.collect())),
+            sorted(map(tuple, topk.collect())),
+        )
+
+    new = build()
+    monkeypatch.setattr(candidates, "python_stage_width", lambda spark, rows=None: 32)
+    old = build()
+    assert new == old
+    assert new[0] and new[1]

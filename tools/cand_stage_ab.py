@@ -103,7 +103,7 @@ def child(master: str, variant: str, path: str) -> None:
             ranked_hot_buckets,
         )
 
-        cfg = DedupConfig(shuffle_partitions=max(8, 2 * cpus))
+        cfg = DedupConfig()
         if variant == "all_window":
             w = Window.partitionBy("band_hash").orderBy("doc_id")
             ranked = (
@@ -148,7 +148,7 @@ def gen(corpus: str, out: str) -> None:
     from smqtk_indexing_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=16)
-    cfg = DedupConfig(shuffle_partitions=16)
+    cfg = DedupConfig()
     docs = spark.read.parquet(corpus)
     sigs = compute_signatures(
         docs, cfg, text_col="content", include=("bands", "sha256")

@@ -50,6 +50,12 @@ def main() -> None:
         # plan shows the real topology, not a checkpoint scan
         if name == "near_dup_pairs_lsh":
             return E._lsh_pairs(spark, sf_dir, materialize=False)
+        if name == "ann_rp_lsh_topk":
+            from smqtk_indexing_spark.operators import ann
+
+            return ann.rp_lsh_topk(
+                E._emb(spark, sf_dir), k=E.TOPK, materialize=False
+            )
         if name == "dup_clusters":
             # force the DISTRIBUTED star path: the hybrid's driver
             # union-find fast path (taken at sf0.01's tiny edge count)
