@@ -24,10 +24,7 @@ from smqtk_indexing_spark.functions import metrics as M
 from smqtk_indexing_spark.functions import text as TX
 from smqtk_indexing_spark.functions.text import LANG_MARKERS, _STOPWORDS
 from smqtk_indexing_spark.operators import ann, dedup
-from smqtk_indexing_spark.operators.candidates import (
-    band_buckets,
-    candidate_pairs_local,
-)
+from smqtk_indexing_spark.operators.candidates import band_buckets, candidate_pairs
 from smqtk_indexing_spark.operators.cluster import connected_components
 from smqtk_indexing_spark.operators.multimodal import extract_features, to_assets
 from smqtk_indexing_spark.operators.signatures import (
@@ -128,8 +125,24 @@ _DOCS_COUNT_MEMO: dict = {}
 _DEDUP_MEMO: dict = {}
 
 
+def _memo_key(spark, sf_dir: str) -> tuple:
+    """Key of _PAIR_MEMO, _SUBSTR_MEMO and _DEDUP_MEMO entries."""
+    return (id(spark.sparkContext), sf_dir, CFG.config_hash)
+
+
+def _memo_frames(value) -> list:
+    """The DataFrames a memo value holds: a DataFrame (_PAIR_MEMO), a
+    (DataFrame, caches) pair (_SUBSTR_MEMO) or a PipelineResult
+    (_DEDUP_MEMO)."""
+    if isinstance(value, DataFrame):
+        return [value]
+    if isinstance(value, tuple):
+        return [value[0]]
+    return list(value.tables.values())
+
+
 def _full_dedup_all(spark, sf_dir: str):
-    key = (id(spark.sparkContext), sf_dir, CFG.config_hash)
+    key = _memo_key(spark, sf_dir)
     hit = _DEDUP_MEMO.get(key)
     if hit is None:
         from smqtk_indexing_spark.plans.pipeline import run_dedup
@@ -141,9 +154,9 @@ def _full_dedup_all(spark, sf_dir: str):
 
 def _docs_count(spark, sf_dir: str) -> int:
     """Memoized corpus row count (parquet metadata count — no data scan).
-    Gates scale-only materializations like the ranked-hot-bucket persist;
-    testdata is immutable per the driver contract, so the count is a pure
-    function of sf_dir alone — keyed by path only (ADVICE r5: an id()-based
+    Gates the content fetch's broadcast and the substring pass's short
+    leg; testdata is immutable per the driver contract, so the count is a
+    pure function of sf_dir alone — keyed by path only (ADVICE r5: an id()-based
     key whose int value does not pin the context could alias a recycled
     id() after context GC; the path key is context-independent by
     construction)."""
@@ -163,30 +176,17 @@ def _memo_evict_stopped() -> None:
     process lifetime (ADVICE r3). The id()-key is safe BECAUSE the value
     pins the context; eviction restores that invariant for live contexts
     only."""
-    dead = [
-        k
-        for k, df in _PAIR_MEMO.items()
-        if getattr(df.sparkSession.sparkContext, "_jsc", None) is None
-    ]
-    for k in dead:
-        del _PAIR_MEMO[k]
-    dead = [
-        k
-        for k, (df, _caches) in _SUBSTR_MEMO.items()
-        if getattr(df.sparkSession.sparkContext, "_jsc", None) is None
-    ]
-    for k in dead:
-        del _SUBSTR_MEMO[k]
-    dead = [
-        k
-        for k, res in _DEDUP_MEMO.items()
-        if any(
-            getattr(df.sparkSession.sparkContext, "_jsc", None) is None
-            for df in res.tables.values()
-        )
-    ]
-    for k in dead:
-        del _DEDUP_MEMO[k]
+    for memo in (_PAIR_MEMO, _SUBSTR_MEMO, _DEDUP_MEMO):
+        dead = [
+            k
+            for k, value in memo.items()
+            if any(
+                getattr(df.sparkSession.sparkContext, "_jsc", None) is None
+                for df in _memo_frames(value)
+            )
+        ]
+        for k in dead:
+            del memo[k]
 
 
 def _lsh_pairs(spark, sf_dir, materialize: bool = True):
@@ -200,29 +200,17 @@ def _lsh_pairs(spark, sf_dir, materialize: bool = True):
     # ``materialize=False`` returns the PURE LAZY plan (no persist, no
     # checkpoint, no memo) — for plan capture (tools/explain_plans.py).
     _memo_evict_stopped()
-    key = (id(spark.sparkContext), sf_dir, CFG.config_hash)
+    key = _memo_key(spark, sf_dir)
     hit = _PAIR_MEMO.get(key) if materialize else None
     if hit is not None:
         return hit
     docs = _docs(spark, sf_dir)
     sigs = compute_signatures(docs, CFG, include=("bands",))
     buckets = band_buckets(sigs, CFG)
-    # r07: all-mode candidates come from candidates.candidate_pairs_local —
-    # ONE bucket-key exchange + a per-partition kernel (exact local sizes,
-    # small buckets enumerated in place, giants striped into the same
-    # salted block rows) instead of the ranked-hot-bucket derivation
-    # (sizes groupBy + AQE join-back + rank window) and its persist gate.
-    # Identical pair set (oracle-gated); the single-consumer dataflow also
-    # runs the signature pass exactly once, so the ranked_persist_min_docs
-    # materialization gate is moot on this path (the pipeline twin keeps
-    # the hybrid generator + ranked checkpoint stage). Measured at sf1.0
-    # local[32]: candidate stage 3.5 s -> ~1 s, query 5.9 s -> ~3.7 s.
     sh = None
-    # (plan capture runs no count job; the width is then one task per core)
+    # (plan capture runs no count job and takes the broadcast fetch below)
     n_docs = _docs_count(spark, sf_dir) if materialize else None
-    cand = candidate_pairs_local(
-        buckets, CFG, rows=None if n_docs is None else n_docs * CFG.bands
-    )
+    cand = candidate_pairs(buckets, CFG, mode="all")
     if materialize:
         cand = cand.persist()
     try:
@@ -250,7 +238,7 @@ def _lsh_pairs(spark, sf_dir, materialize: bool = True):
         else:
             cand_docs = docs.join(
                 cand_ids.hint("shuffle_hash"), "doc_id", "left_semi"
-            ).repartition(python_stage_width(spark, n_docs))
+            ).repartition(python_stage_width(spark))
         sh = compute_shingle_arrays(cand_docs, CFG)
         if materialize:
             sh = sh.persist()
@@ -375,7 +363,7 @@ def q_substring_containment(spark, sf_dir):
     # rarest anchor joins one chunk per containee (435k rows, ~1400x
     # less — OPTIMIZATION_r07.md).
     _memo_evict_stopped()
-    key = (id(spark.sparkContext), sf_dir, CFG.config_hash)
+    key = _memo_key(spark, sf_dir)
     hit = _SUBSTR_MEMO.get(key)
     if hit is not None:
         return hit[0]

@@ -696,13 +696,14 @@ def rp_lsh_topk(
     collapse such boilerplate; the drop profile is observable via
     ``candidates.bucket_stats`` on the bucket table).
 
-    Candidate generation is the all-mode generator of the
-    ``__spark_entry__`` queries, ``candidates.candidate_pairs_local``: one
-    bucket-key exchange and a per-partition kernel. Buckets above
-    ``salt_block_rows`` are striped into salted block pairs spread over
-    the whole cluster, so no single row or task enumerates a giant
-    bucket's ~m^2 pairs (isolated A/B at the 20k-vector bench corpus
-    against the hybrid ``candidate_pairs``: cand stage 4.4 s -> ~1.5 s,
+    Candidate generation is the engine's one all-mode generator,
+    ``candidates.candidate_pairs(mode="all")``: one bucket-key exchange, a
+    sort within each partition and a streaming kernel that holds one Arrow
+    batch plus one bucket. Buckets above ``salt_block_rows`` are striped
+    into salted block pairs spread over the whole cluster, so no single
+    row or task enumerates a giant bucket's ~m^2 pairs (the one-exchange
+    form measured at the 20k-vector bench corpus against the former
+    hybrid self-join generator: cand stage 4.4 s -> ~1.5 s,
     identical pair sets). Pairs come back undirected (a < b), so each
     cosine is computed ONCE and then emitted in both (query, neighbor)
     directions before ranking — halving the re-rank arithmetic vs the
@@ -711,7 +712,7 @@ def rp_lsh_topk(
     With ``materialize`` (default) the (n*k)-row result is checkpointed
     eagerly so certificate consumers' repeat actions reuse it.
     ``materialize=False`` keeps the plan fully lazy for plan capture."""
-    from smqtk_indexing_spark.operators.candidates import candidate_pairs_local
+    from smqtk_indexing_spark.operators.candidates import candidate_pairs
 
     sigs = rp_signatures(emb, 64, seed, id_col, vec_col)
     width = 64 // bands
@@ -733,7 +734,7 @@ def rp_lsh_topk(
     cfg = replace(
         DEFAULT_CONFIG, bucket_cap=bucket_cap, salt_block_rows=salt_block_rows
     )
-    cand = candidate_pairs_local(bucketed, cfg)
+    cand = candidate_pairs(bucketed, cfg, mode="all")
     # exact cosine re-rank once per undirected pair, via the broadcast
     # corpus matrix instead of two vector-fetch joins + an interpreted
     # per-pair Catalyst fold (see _pair_cosines_bcast; bit-identical

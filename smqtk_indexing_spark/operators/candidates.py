@@ -8,13 +8,22 @@ an all-pairs self-join: every document is simultaneously query and corpus.
 Scale design (north rule: "partitioning / shuffle / skew handled explicitly"):
 - band keys already fold the band index (kernels.band_keys), so the bucket key
   is one LongType column — a single hash-partitionable shuffle key.
-- pair explosion is quadratic per bucket. Buckets are split into a *normal*
-  path (self-equi-join; Catalyst/AQE pick the physical join and split skewed
-  partitions) and a *salted* path for giant buckets: members are striped into
-  blocks of ~``salt_block_rows`` and block-pairs are enumerated via an
-  exploded block-index join, so one hot key's O(m^2) work spreads over
-  O((m/r)^2) independent tasks. No pairs are lost — salting redistributes,
-  it does not sample.
+- all-mode generation is ONE bucket-key exchange plus a spillable sort on
+  band_hash within each partition, feeding a streaming kernel
+  (``block_rows``) that sees each bucket as a contiguous run of rows. The
+  kernel holds one Arrow batch plus the one bucket that straddles its end,
+  never a whole partition; Spark's sort does the grouping and spills under
+  pressure. The sort key is band_hash alone: a single long key takes
+  Spark's radix sort, while adding doc_id forces a comparison sort (sort
+  time on the 160k-row sf0.1 bucket table in a fresh local[4] JVM: 37 ms
+  vs 300-800 ms), and the pair set does not depend on member order.
+- pair explosion is quadratic per bucket. Every bucket is emitted as BLOCK
+  rows: a small bucket is one self block pair; a giant bucket (more than
+  ``salt_block_rows`` members) is striped into blocks of ``salt_block_rows``
+  and emitted as its ``ceil(m/salt)^2 / 2`` block pairs, which are then
+  round-robin spread, so one hot key's O(m^2) work runs over O((m/r)^2)
+  independent rows. No pairs are lost — salting redistributes, it does not
+  sample.
 - buckets larger than ``bucket_cap`` are dropped (recall boundary, logged):
   at corpus scale those are boilerplate whose members are already collapsed
   by the exact-sha fast path upstream (plans/pipeline.py).
@@ -26,11 +35,16 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from smqtk_indexing_spark.config import DedupConfig
 from smqtk_indexing_spark.session import python_stage_width
+
+# Member ids one output frame of the block kernel may hold before it is
+# yielded. A row holds at most 2 x salt_block_rows ids, so a frame stays
+# under this plus one row however many block pairs a giant bucket emits.
+FRAME_IDS = 1 << 17
 
 
 def band_buckets(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -56,126 +70,114 @@ def bucket_stats(buckets: DataFrame) -> DataFrame:
     )
 
 
-def ranked_hot_buckets(buckets: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(band_hash, doc_id, m, rn) for members of HOT buckets only
-    (2 <= m <= bucket_cap): bucket sizes via groupBy count (map-side
-    partial combine), an AQE-adaptive join back (broadcast while the hot
-    bucket list is small, shuffle join at corpus scale), then ONE rank
-    window over the ~10x-smaller survivor set.
+class BucketTail:
+    """The trailing bucket of the rows ``block_rows`` has read so far: the
+    only state carried across a batch edge. ``rows`` is what it holds —
+    0 once the bucket has passed the cap, whose remaining rows are then
+    skipped rather than kept."""
 
-    This is the shared input of every all-mode candidate branch (x side,
-    y side, giant-bucket striping). It exists as its own operator so
-    callers can MATERIALIZE it once (pipeline checkpoint stage / persist):
-    Catalyst does not share non-exchange subplans between the self-join's
-    branches, so an unmaterialized frame re-derives the explode + join +
-    window once per branch (round-4 measurement: the duplicated derivation
-    was most of the cand_pairs stage wall)."""
-    sizes = (
-        buckets.groupBy("band_hash")
-        .agg(F.count("*").alias("m"))
-        .where((F.col("m") > 1) & (F.col("m") <= cfg.bucket_cap))
-    )
-    w_rank = Window.partitionBy("band_hash").orderBy("doc_id")
-    return buckets.join(sizes, "band_hash").withColumn(
-        "rn", F.row_number().over(w_rank)
-    )
+    def __init__(self) -> None:
+        self.key = None
+        self.parts: list = []
+        self.rows = 0
+        self.over = False
 
+    def start(self, key, members: np.ndarray, cap: int) -> None:
+        self.key = key
+        self.parts, self.rows, self.over = [], 0, False
+        self.add(members, cap)
 
-def candidate_pairs_local(
-    buckets: DataFrame,
-    cfg: DedupConfig,
-    salt_threshold: int | None = None,
-    rows: int | None = None,
-) -> DataFrame:
-    """All-mode candidate pairs via ONE bucket-key exchange + a
-    per-partition kernel — the r07 generator for the driver-query paths
-    (same pair set as ``candidate_pairs(mode='all')``, oracle-gated).
-
-    The hybrid generator derives the shared ranked-hot-bucket table with a
-    sizes groupBy (exchange 1), an AQE join-back, and a rank window
-    (exchange 2), then self-joins the survivors — and every branch that is
-    not materialized re-derives the upstream signature pass (guide §2.4:
-    remove shuffles outright; the rank ordinal only re-encoded doc_id
-    order). Here the bucket table is hash-partitioned ONCE on band_hash,
-    so each task holds its buckets complete and computes exact sizes
-    locally: singletons and ``bucket_cap`` drops never leave the task, and
-    the sizes join + rank window disappear. Emission is uniform BLOCK
-    rows: a small bucket (m <= ``salt_threshold``) is one self block pair
-    over its sorted member list; a giant bucket is striped into
-    ``ceil(m/salt)^2`` block pairs exactly like the hybrid's salted path —
-    so a hot key's O(m^2) enumeration still spreads over the whole cluster
-    after the block repartition, and no single kernel task materializes a
-    giant bucket's pair set. Downstream: one explode to (a, b) + distinct
-    (unchanged).
-
-    Measured at the 50k-doc bench corpus (local[32], warm): the
-    near_dup_pairs_lsh candidate stage (ranked persist + hybrid) 3.5 s ->
-    ~1 s; pair sets identical at every SF.
-
-    Memory: each kernel task buffers its whole hash partition, so the
-    width comes from ``session.python_stage_width``. Pass ``rows`` (the
-    bucket-table row count) when it is known: the width then grows so no
-    task holds more than ``PYTHON_STAGE_ROWS_PER_TASK`` rows. Without it
-    the width is one task per core, which bounds the path to the
-    query-table scale it serves; the pipeline keeps the streaming hybrid
-    generator.
-    """
-    salt = salt_threshold or cfg.salt_block_rows
-    cap = cfg.bucket_cap
-    width = python_stage_width(buckets.sparkSession, rows)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = list(batches)
-        if not pdfs:
+    def add(self, members: np.ndarray, cap: int) -> None:
+        if self.over:
             return
-        bh = np.concatenate([p["band_hash"].to_numpy(np.int64) for p in pdfs])
-        did = np.concatenate([p["doc_id"].to_numpy(np.int64) for p in pdfs])
-        o = np.lexsort((did, bh))
-        bh, did = bh[o], did[o]
-        starts = np.flatnonzero(np.concatenate([[True], bh[1:] != bh[:-1]]))
-        ends = np.concatenate([starts[1:], [len(bh)]])
-        sizes = ends - starts
-        keep = (sizes >= 2) & (sizes <= cap)
-        ba: list = []
-        bb: list = []
-        same: list = []
-        for s, e in zip(starts[keep], ends[keep]):
-            mem = did[s:e]
-            m = e - s
-            if m <= salt:
-                ba.append(mem)
-                bb.append(mem)
-                same.append(True)
-            else:
-                blocks = [mem[i : i + salt] for i in range(0, m, salt)]
-                nb = len(blocks)
-                for i in range(nb):
-                    for j in range(i, nb):
-                        ba.append(blocks[i])
-                        bb.append(blocks[j])
-                        same.append(i == j)
-        if ba:
-            yield pd.DataFrame({"ba": ba, "bb": bb, "same": same})
+        if self.rows + len(members) > cap:
+            self.parts, self.rows, self.over = [], 0, True
+            return
+        # a copy, so the batch the slice came from can be released
+        self.parts.append(members.copy())
+        self.rows += len(members)
 
-    blocks = (
-        buckets.repartition(width, "band_hash")
-        .mapInPandas(gen, schema="ba array<long>, bb array<long>, same boolean")
-        # spread block-pair rows (giant buckets emit many from one task)
-        .repartition(width)
-    )
-    gx = F.explode("ba").alias("x")
-    return (
-        blocks.select(gx, "bb", "same")
-        .select(
-            F.col("x"),
-            F.explode(
-                F.when(F.col("same"), F.filter("bb", lambda y: y > F.col("x")))
-                .otherwise(F.col("bb"))
-            ).alias("y"),
-        )
-        .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
-        .distinct()
-    )
+    def take(self) -> np.ndarray | None:
+        """The finished bucket's members (None if it was dropped), then
+        reset to empty."""
+        members = None
+        if self.key is not None and not self.over:
+            members = np.concatenate(self.parts)
+        self.key, self.parts, self.rows, self.over = None, [], 0, False
+        return members
+
+
+def _bucket_blocks(members: np.ndarray | None, salt: int) -> Iterator[tuple]:
+    """(ba, bb, same) block rows of one finished bucket: with ``same`` the
+    consumer keeps only y > x, so each pair comes out once in any member
+    order."""
+    if members is None or len(members) < 2:
+        return
+    if len(members) <= salt:
+        yield members, members, True
+        return
+    blocks = [members[i : i + salt] for i in range(0, len(members), salt)]
+    for i, bi in enumerate(blocks):
+        for j in range(i, len(blocks)):
+            yield bi, blocks[j], i == j
+
+
+def block_rows(
+    batches: Iterator[pd.DataFrame],
+    salt: int,
+    cap: int,
+    tail: BucketTail | None = None,
+) -> Iterator[tuple]:
+    """Stream (band_hash, doc_id) batches, sorted on band_hash across the
+    whole iterator, into the (ba, bb, same) block rows of every bucket with
+    2..``cap`` members.
+
+    Every bucket that ends inside a batch is emitted before the next batch
+    is read; only the bucket running to the batch's end is carried over, in
+    ``tail`` (pass one to observe it). A bucket is dropped as soon as it
+    passes ``cap``, and its later rows are skipped, so the rows held never
+    exceed one batch plus ``cap``."""
+    tail = tail if tail is not None else BucketTail()
+    for pdf in batches:
+        bh = pdf["band_hash"].to_numpy(np.int64)
+        did = pdf["doc_id"].to_numpy(np.int64)
+        if not len(bh):
+            continue
+        starts = np.flatnonzero(np.r_[True, bh[1:] != bh[:-1]])
+        ends = np.r_[starts[1:], len(bh)]
+        first = 0
+        if bh[0] == tail.key:
+            tail.add(did[: ends[0]], cap)
+            if len(starts) == 1:
+                continue
+            first = 1
+        yield from _bucket_blocks(tail.take(), salt)
+        # runs between the first and the last end inside this batch
+        s, e = starts[first:-1], ends[first:-1]
+        keep = (e - s >= 2) & (e - s <= cap)
+        for a, b in zip(s[keep].tolist(), e[keep].tolist()):
+            # copied: a view would pin the whole batch in the output frame
+            yield from _bucket_blocks(did[a:b].copy(), salt)
+        tail.start(bh[starts[-1]], did[starts[-1] :], cap)
+    yield from _bucket_blocks(tail.take(), salt)
+
+
+def block_frames(rows: Iterator[tuple]) -> Iterator[pd.DataFrame]:
+    """Group block rows into output frames of about ``FRAME_IDS`` ids."""
+    ba: list = []
+    bb: list = []
+    same: list = []
+    ids = 0
+    for a, b, s in rows:
+        ba.append(a)
+        bb.append(b)
+        same.append(s)
+        ids += len(a) + len(b)
+        if ids >= FRAME_IDS:
+            yield pd.DataFrame({"ba": ba, "bb": bb, "same": same})
+            ba, bb, same, ids = [], [], [], 0
+    if ba:
+        yield pd.DataFrame({"ba": ba, "bb": bb, "same": same})
 
 
 def candidate_pairs(
@@ -189,13 +191,18 @@ def candidate_pairs(
     Corresponds to J1+J3 in SURVEY.md §2.4.
 
     mode="all" (default): EVERY co-bucketed pair — the exact pair-output
-    semantic (matches the brute-force oracle). Quadratic per bucket:
-    template-heavy corpora produce buckets of thousands of members whose
-    sum(C(m,2)) pair explosion dominates the whole job (measured on the
-    400k-doc synthetic corpus: 1.0e9 raw pairs over the RAW bucket table;
-    the upstream exact-dup collapse, which the pipeline always applies
-    first, cuts the same corpus to ~570k raw pairs — the collapse IS the
-    primary skew defense, this operator handles what survives it).
+    semantic (matches the brute-force oracle). The bucket table is
+    hash-partitioned ONCE on band_hash and sorted on it within each
+    partition, so each task sees its buckets whole, as contiguous runs;
+    ``block_rows`` streams them into block rows (see the module
+    docstring), dropping singletons and buckets over ``bucket_cap`` inside
+    the task. Quadratic per bucket: template-heavy corpora produce buckets
+    of thousands of members whose sum(C(m,2)) pair explosion dominates the
+    whole job (measured on the 400k-doc synthetic corpus: 1.0e9 raw pairs
+    over the RAW bucket table; the upstream exact-dup collapse, which the
+    pipeline always applies first, cuts the same corpus to ~570k raw pairs
+    — the collapse IS the primary skew defense, this operator handles what
+    survives it).
 
     mode="star": per bucket, connect each member to the bucket MINIMUM only
     — sum(m-1) rows, linear in corpus size. For CLUSTERING this preserves
@@ -205,9 +212,14 @@ def candidate_pairs(
     scale, where giant boilerplate groups make all-pairs enumeration
     quadratic. The pair LIST is a connectivity skeleton, not the full pair
     set — use "all" when the pair set itself is the product.
+
+    ``ranked`` must be None; it is accepted only so older callers that
+    pass ``ranked=None`` keep working.
     """
+    if ranked is not None:
+        raise ValueError("candidate_pairs no longer takes a ranked table")
     mode = mode or cfg.pair_mode
-    salt_threshold = salt_threshold or cfg.salt_block_rows
+    salt = salt_threshold or cfg.salt_block_rows
     if mode == "star":
         # Per-bucket (min, count) via groupBy agg (map-side partial
         # combine) + join-back, NOT a window: the window form sorts the
@@ -218,8 +230,8 @@ def candidate_pairs(
         #
         # The join-back is FORCED to a shuffle-hash join (build side = the
         # small survivor list). Round-6 isolated A/B on the 800k-corpus
-        # bucket table (tools/cand_stage_ab.py, 3 interleaved rounds,
-        # stage-level floor probes, BENCH/cand_ab_20260817_200213.json):
+        # bucket table (3 interleaved rounds, stage-level floor probes,
+        # BENCH/cand_ab_20260817_200213.json):
         # the AQE broadcast probe builds its ~1M-row hash relation
         # SERIALLY on the driver — a constant that does not shrink with
         # cores — and lost to SHJ in-window at BOTH levels in every round
@@ -243,87 +255,23 @@ def candidate_pairs(
             .select(F.col("m").alias("a"), F.col("doc_id").alias("b"))
             .distinct()
         )
-    # Hybrid "all" topology (round-3 measurement: the in-row HOF explosion
-    # scaled 2->8 at only 0.53 on small-bucket corpora while a
-    # window-rank co-partitioned self-join scaled at 0.84 and was 24%
-    # faster at 8 cores; identical pair sets):
-    #
-    # - Bucket sizes come from a groupBy COUNT first (map-side partial
-    #   combine), not a count window: ~90% of bucket rows are singletons
-    #   (11.9M -> 1.09M survivors measured on the 400k corpus), so
-    #   filtering BEFORE the rank window sorts 1/10th the rows — and the
-    #   union's two branches each re-derive their input, so keeping that
-    #   input lean also halves the duplicated work (round-4: this cut the
-    #   cand_pairs stage from ~22 s to ~8 s at local[8]). The hot-size
-    #   join is left to AQE: broadcast while the >1-member bucket list is
-    #   small, shuffle join at corpus scale.
-    # - SMALL buckets (m <= salt_threshold — after the exact-dup collapse
-    #   this is virtually every bucket): the rank-ordered self-join
-    #   reuses the window's hash partitioning, so pair generation is
-    #   whole-stage-codegen JVM work with no interpreted higher-order
-    #   functions and no second wide exchange.
-    # - GIANT buckets (m > salt_threshold): the salted in-row block
-    #   machinery below — a hot band_hash key would serialize the
-    #   co-partitioned join into one task, so giant buckets' O(m^2) work
-    #   is striped over O((m/r)^2) independent block-pair rows instead
-    #   (deterministic by construction, not reliant on AQE skew splits).
-    # ``ranked``: pass a MATERIALIZED ranked_hot_buckets(buckets, cfg)
-    # frame to stop each branch below re-deriving it (see that operator's
-    # docstring); defaults to the lazy inline form.
-    hot = ranked if ranked is not None else ranked_hot_buckets(buckets, cfg)
-    small = hot.where(F.col("m") <= salt_threshold)
-    x = small.select(
-        "band_hash", F.col("doc_id").alias("xa"), F.col("rn").alias("ra")
-    )
-    y = small.select(
-        "band_hash", F.col("doc_id").alias("yb"), F.col("rn").alias("rb")
-    )
-    small_pairs = (
-        x.join(y, "band_hash")
-        .where(F.col("ra") < F.col("rb"))
-        .select(F.least("xa", "yb").alias("a"), F.greatest("xa", "yb").alias("b"))
-    )
-    giant = hot.where(F.col("m") > salt_threshold).select("band_hash", "doc_id")
-    nb = F.ceil(F.size("ms") / F.lit(salt_threshold)).cast("int")
-    # (i, j) block-INDEX pairs are enumerated first (O(nb^2) ints, a few
-    # KB even at bucket_cap) and the member blocks are sliced only in the
-    # per-row projection AFTER the explode — so no single row ever holds
-    # the fully materialized nested block-pair array (round-4 VERDICT
-    # item 3: the previous in-row form evaluated ~nb^2 x 2r longs, ~78 MB
-    # at bucket_cap=100k/salt=1024, inside ONE row). Peak per-row memory
-    # is now O(m + 2 x salt_threshold): the collect_list row plus one
-    # sliced block pair.
-    index_pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.col("nb") - 1),
-            lambda i: F.transform(
-                F.sequence(i, F.col("nb") - 1),
-                lambda j: F.struct(i.alias("i"), j.alias("j")),
-            ),
-        )
-    )
-    g = (
-        giant.groupBy("band_hash")
-        .agg(F.collect_list("doc_id").alias("ms"))
-        .withColumn("nb", nb)
-        .select("ms", F.explode(index_pairs).alias("ij"))
-        .select(
-            F.slice(
-                "ms", F.col("ij.i") * salt_threshold + 1, salt_threshold
-            ).alias("ba"),
-            F.slice(
-                "ms", F.col("ij.j") * salt_threshold + 1, salt_threshold
-            ).alias("bb"),
-            (F.col("ij.i") == F.col("ij.j")).alias("same"),
-        )
-        # spread giant buckets' work over the WHOLE cluster: width follows
-        # the session's actual parallelism, not a fixed config constant
-        # (round-1 VERDICT item 8)
-        .repartition(python_stage_width(buckets.sparkSession))
+    cap = cfg.bucket_cap
+    width = python_stage_width(buckets.sparkSession)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return block_frames(block_rows(batches, salt, cap))
+
+    blocks = (
+        buckets.select("band_hash", "doc_id")
+        .repartition(width, "band_hash")
+        .sortWithinPartitions("band_hash")
+        .mapInPandas(kernel, schema="ba array<long>, bb array<long>, same boolean")
+        # spread block-pair rows (giant buckets emit many from one task)
+        .repartition(width)
     )
     gx = F.explode("ba").alias("x")
-    giant_pairs = (
-        g.select(gx, "bb", "same")
+    return (
+        blocks.select(gx, "bb", "same")
         .select(
             F.col("x"),
             F.explode(
@@ -332,5 +280,5 @@ def candidate_pairs(
             ).alias("y"),
         )
         .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
+        .distinct()
     )
-    return small_pairs.unionByName(giant_pairs).distinct()

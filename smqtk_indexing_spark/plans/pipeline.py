@@ -27,11 +27,7 @@ from pyspark.sql import functions as F
 
 from smqtk_indexing_spark.config import DedupConfig
 from smqtk_indexing_spark.operators import dedup as X
-from smqtk_indexing_spark.operators.candidates import (
-    band_buckets,
-    candidate_pairs,
-    ranked_hot_buckets,
-)
+from smqtk_indexing_spark.operators.candidates import band_buckets, candidate_pairs
 from smqtk_indexing_spark.operators.cluster import connected_components
 from smqtk_indexing_spark.operators.signatures import (
     compute_shingle_arrays,
@@ -225,27 +221,7 @@ def run_dedup(
     sigs = sigs_all.join(reps_ids, "doc_id", "left_semi")
 
     buckets = band_buckets(sigs, cfg)
-    if cfg.pair_mode == "all" and n_docs >= cfg.ranked_persist_min_docs:
-        # materialize the shared ranked-hot-bucket table as its own stage:
-        # every all-mode candidate branch (x/y self-join sides, giant
-        # striping) reads it, and unmaterialized each branch re-derives
-        # the explode + size join + rank window (round-4: this halved the
-        # cand_pairs stage wall at local[8]). Size-gated on the SAME
-        # config constant as the driver entry (cfg.ranked_persist_min_docs
-        # — below it the extra stage materialization costs more than the
-        # duplicated lazy derivation; A/B numbers in config.py).
-        ranked = ck.run(
-            "hot_buckets", lambda: ranked_hot_buckets(buckets, cfg), res
-        )
-        cand = ck.run(
-            "cand_pairs",
-            lambda: candidate_pairs(buckets, cfg, ranked=ranked),
-            res,
-        )
-    else:
-        cand = ck.run(
-            "cand_pairs", lambda: candidate_pairs(buckets, cfg), res
-        )
+    cand = ck.run("cand_pairs", lambda: candidate_pairs(buckets, cfg), res)
 
     def build_dup_pairs() -> DataFrame:
         cand_ids = (
@@ -262,12 +238,13 @@ def run_dedup(
         # session.py maxPartitionBytes). Above the cap: shuffle-hash join
         # (build side = ids, content side never sorted; SMJ would
         # sort/spill it) + a repartition to python_stage_width (one task
-        # per core, more once the corpus passes its per-task row bound),
-        # because UDF stages need partition counts that follow CORES, not
-        # bytes — the semi-join output's byte-sized partitioning starves /
-        # skews the Arrow pass (measured round 4 at local[8]: 9.3 s on the
-        # join's 16 partitions vs 4.3 s repartitioned to 4 waves per core;
-        # the single wave has not been measured at that scale).
+        # per core; the Arrow pass streams its batches, so the width does
+        # not grow with the corpus), because UDF stages need partition
+        # counts that follow CORES, not bytes — the semi-join output's
+        # byte-sized partitioning starves / skews the Arrow pass (measured
+        # round 4 at local[8]: 9.3 s on the join's 16 partitions vs 4.3 s
+        # repartitioned to 4 waves per core; the single wave has not been
+        # measured at that scale).
         n_docs = next(
             (row[1] for row in res.lineage if row[0] == "member_map"), None
         )
@@ -278,7 +255,7 @@ def run_dedup(
         else:
             cand_docs = base.join(
                 cand_ids.hint("shuffle_hash"), "doc_id", "left_semi"
-            ).repartition(python_stage_width(spark, n_docs))
+            ).repartition(python_stage_width(spark))
         # Materialization boundary between the content exchange and the
         # Arrow shingle pass (round-2 VERDICT item 4): fused, the stage
         # runs every core's JVM shuffle task AND its python worker

@@ -12,25 +12,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Rows one Python task may take before python_stage_width adds tasks
-# beyond one per core. candidate_pairs_local holds its whole partition:
-# ~110 B a row with its input batches, sort copies and output (tracemalloc
-# on a synthetic 250k-row partition), so this keeps one task near 28 MB.
-PYTHON_STAGE_ROWS_PER_TASK = 250_000
 
-
-def python_stage_width(spark: SparkSession, rows: int | None = None) -> int:
+def python_stage_width(spark: SparkSession) -> int:
     """Partition count for a Python (mapInPandas) stage: one task per core.
 
     Every Python task pays a fixed start-up cost in its worker, so extra
-    waves of small tasks only add that cost. The width grows past the core
-    count only when the caller knows ``rows`` and one task per core would
-    exceed ``PYTHON_STAGE_ROWS_PER_TASK``.
+    waves of small tasks only add that cost. No Python stage buffers its
+    partition (the candidate kernel streams sorted batches), so the width
+    does not grow with the row count.
     """
-    width = spark.sparkContext.defaultParallelism
-    if rows is not None:
-        width = max(width, -(-rows // PYTHON_STAGE_ROWS_PER_TASK))
-    return width
+    return spark.sparkContext.defaultParallelism
 
 
 def skip_unchanged_zip_rereads() -> None:

@@ -77,8 +77,8 @@ def test_fast_queries_match_duckdb_sf0001(spark, name, sf001_dir):
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_candidate_width_does_not_change_pairs(spark, monkeypatch, sf, sf001_dir):
-    # candidate_pairs_local used max(32, cores) tasks; python_stage_width
-    # gives one per core. The pair and top-k sets must not depend on it.
+    # python_stage_width gives the candidate stage one task per core. The
+    # pair and top-k sets must not depend on the width.
     import os
 
     from smqtk_indexing_spark.operators import ann, candidates
@@ -94,7 +94,7 @@ def test_candidate_width_does_not_change_pairs(spark, monkeypatch, sf, sf001_dir
         )
 
     new = build()
-    monkeypatch.setattr(candidates, "python_stage_width", lambda spark, rows=None: 32)
+    monkeypatch.setattr(candidates, "python_stage_width", lambda spark: 32)
     old = build()
     assert new == old
     assert new[0] and new[1]

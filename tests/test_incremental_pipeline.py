@@ -3,7 +3,8 @@ incrementally, and verify cluster equivalence with a from-scratch run over
 the full corpus (reference state-transition pattern: additive-update
 invariants, tests/impls/nn_index/test_faiss.py:197-226 analog)."""
 
-import pytest
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from smqtk_indexing_spark.config import DedupConfig
@@ -81,3 +82,67 @@ def test_incremental_update_signature_counts(spark):
     sigs = updated.tables["signatures"]
     assert sigs.count() == 300
     assert sigs.select("doc_id").distinct().count() == 300
+
+
+def test_chained_updates_equal_scratch_after_every_step(spark):
+    """Three update_dedup appends in a chain; after each one the clusters
+    equal a from-scratch run_dedup over the same corpus. The second batch
+    only joins existing families: exact copies, and whitespace variants
+    whose shingles (so every band bucket) equal their source's, so every
+    bucket it touches already existed."""
+    files, truth = synth_files(n=400, seed=41)
+    order = np.random.default_rng(41).permutation(len(files))
+    first, batch1, batch3 = (
+        files.iloc[order[:250]], files.iloc[order[250:320]], files.iloc[order[320:]]
+    )
+    # sources: members of families both of whose ends are already indexed
+    seen = set(first["doc_id"]) | set(batch1["doc_id"])
+    in_seen = truth["a"].isin(seen) & truth["b"].isin(seen)
+    family = sorted(
+        {int(x) for x in pd.concat([truth["a"][in_seen], truth["b"][in_seen]])}
+    )[:12]
+    assert len(family) >= 6
+    src = files.set_index("doc_id").loc[family].reset_index()
+    copies = src.assign(doc_id=src["doc_id"] + 10_000)
+    variants = src.assign(
+        doc_id=src["doc_id"] + 20_000,
+        content=src["content"].str.replace(" ", "  ", n=1),
+    )
+    batch2 = pd.concat([copies, variants], ignore_index=True)
+    assert (variants["content"] != src["content"]).all()
+
+    corpus = first
+    res = run_dedup(spark, spark.createDataFrame(first), CFG)
+    for batch in (batch1, batch2, batch3):
+        corpus = pd.concat([corpus, batch], ignore_index=True)
+        all_df = spark.createDataFrame(corpus)
+        new_ids = spark.createDataFrame(
+            [(int(i),) for i in batch["doc_id"]], "doc_id long"
+        )
+        old_bands = {
+            h
+            for r in res.tables["signatures"].select("bands").collect()
+            for h in r.bands
+        }
+        res = update_dedup(spark, all_df, new_ids, res, CFG)
+        if batch is batch2:
+            new_bands = {
+                h
+                for r in res.tables["signatures"]
+                .where(F.col("doc_id") >= 10_000)
+                .select("bands")
+                .collect()
+                for h in r.bands
+            }
+            assert new_bands and new_bands <= old_bands
+        scratch = run_dedup(spark, all_df, CFG)
+        inc = {(r.doc_id, r.cluster_id) for r in res.tables["clusters"].collect()}
+        full = {
+            (r.doc_id, r.cluster_id) for r in scratch.tables["clusters"].collect()
+        }
+        assert inc == full
+        assert len(inc) == len(corpus)
+    # every copy and variant landed in its source's cluster
+    labels = dict(inc)
+    for d in family:
+        assert labels[d + 10_000] == labels[d] == labels[d + 20_000]

@@ -5,6 +5,9 @@ Mirrors the reference's state-transition + seeded-property patterns
 (``/root/reference/tests/impls/nn_index/test_lsh.py:190-814``).
 """
 
+import contextlib
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +20,7 @@ from smqtk_indexing_spark.operators.signatures import compute_signatures
 from smqtk_indexing_spark.operators.verify import verify_pairs
 
 CFG = DedupConfig()
+SALTS = (8, 64, 10_000)
 
 
 @pytest.fixture(scope="module")
@@ -63,23 +67,37 @@ def test_candidates_find_dups_and_skip_empty(spark, small_docs):
         assert 4 not in (a, b) and 5 not in (a, b)
 
 
+def _co_bucket_pairs(buckets, cap):
+    """Reference all-mode pair set, built in Python from the collected
+    bucket table: every pair sharing a bucket of 2..cap members."""
+    members = {}
+    for r in buckets.collect():
+        members.setdefault(r.band_hash, set()).add(r.doc_id)
+    return {
+        (a, b)
+        for ms in members.values()
+        if 2 <= len(ms) <= cap
+        for a, b in itertools.combinations(sorted(ms), 2)
+    }
+
+
+def _pairs(df):
+    rows = [(r.a, r.b) for r in df.collect()]
+    assert len(rows) == len(set(rows))  # distinct
+    return set(rows)
+
+
 def test_salted_path_equals_normal_path(spark):
     # 40 docs all sharing identical content -> one giant bucket per band;
-    # salted block join must enumerate exactly the same C(40,2) pairs.
+    # salted block rows must enumerate exactly the same C(40,2) pairs.
     rows = [(i, "x y z w " * 10) for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = compute_signatures(df, CFG)
     buckets = band_buckets(sigs, CFG)
-    normal = {
-        (r.a, r.b)
-        for r in candidate_pairs(buckets, CFG, salt_threshold=1000).collect()
-    }
-    salted = {
-        (r.a, r.b)
-        for r in candidate_pairs(buckets, CFG, salt_threshold=8).collect()
-    }
-    assert normal == salted
-    assert len(normal) == 40 * 39 // 2
+    want = _co_bucket_pairs(buckets, CFG.bucket_cap)
+    assert len(want) == 40 * 39 // 2
+    for salt in SALTS:
+        assert _pairs(candidate_pairs(buckets, CFG, salt_threshold=salt)) == want
 
 
 def test_giant_bucket_at_bucket_cap_bounded_rows(spark):
@@ -108,56 +126,160 @@ def test_giant_bucket_at_bucket_cap_bounded_rows(spark):
 def test_hybrid_mixed_small_and_giant_buckets(spark):
     # corpus with BOTH a giant bucket family (30 identical docs -> giant at
     # salt_threshold=8) and small-bucket near-dup groups in the same run:
-    # the small-bucket window-join leg and the giant salted in-row leg must
-    # union + dedupe into exactly the brute-force co-bucket pair set
+    # self block pairs and striped block pairs must dedupe into exactly the
+    # co-bucket pair set
     rows = [(i, "giant family content a b c d " * 5) for i in range(30)]
     rows += [(100 + i, f"small group one {i % 2} x y z w " * 4) for i in range(4)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = compute_signatures(df, CFG)
     buckets = band_buckets(sigs, CFG)
-    want = {
-        (r.a, r.b)
-        for r in candidate_pairs(buckets, CFG, salt_threshold=10_000).collect()
-    }
-    got_rows = candidate_pairs(buckets, CFG, salt_threshold=8).collect()
-    got = {(r.a, r.b) for r in got_rows}
-    assert len(got_rows) == len(got)  # cross-leg duplicates removed
-    assert got == want
+    want = _co_bucket_pairs(buckets, CFG.bucket_cap)
+    for salt in SALTS:
+        got = _pairs(candidate_pairs(buckets, CFG, salt_threshold=salt))
+        assert got == want, salt
     giant_ids = set(range(30))
-    assert {(a, b) for a, b in got if a in giant_ids} >= {
+    assert {(a, b) for a, b in want if a in giant_ids} >= {
         (a, b) for a in range(30) for b in range(a + 1, 30)
     }
 
 
 def test_candidate_pairs_local_parity(spark):
-    # r07: the one-exchange per-partition generator must emit exactly the
-    # hybrid all-mode pair set — mixed small + giant buckets, cap drops,
-    # cross-band duplicates removed — for every salt threshold.
+    # the streaming all-mode generator must emit exactly the co-bucket pair
+    # set — mixed small + giant buckets, cap drops, cross-band duplicates
+    # removed — for every salt threshold.
     from dataclasses import replace
-
-    from smqtk_indexing_spark.operators.candidates import candidate_pairs_local
 
     rows = [(i, "giant family content a b c d " * 5) for i in range(30)]
     rows += [(100 + i, f"small group one {i % 2} x y z w " * 4) for i in range(4)]
     rows += [(200 + i, f"unique doc {i} alpha beta gamma delta " * 3) for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     buckets = band_buckets(compute_signatures(df, CFG), CFG)
-    for salt in (8, 64, 10_000):
-        want = {
-            (r.a, r.b)
-            for r in candidate_pairs(buckets, CFG, salt_threshold=salt).collect()
-        }
-        got_rows = candidate_pairs_local(buckets, CFG, salt_threshold=salt).collect()
-        got = {(r.a, r.b) for r in got_rows}
-        assert len(got_rows) == len(got)  # distinct
-        assert got == want, salt
-    # bucket_cap drop parity: cap below the giant family size drops it in
-    # both generators
+    want = _co_bucket_pairs(buckets, CFG.bucket_cap)
+    for salt in SALTS:
+        assert _pairs(candidate_pairs(buckets, CFG, salt_threshold=salt)) == want
+    # bucket_cap below the giant family size drops its buckets
     cfg_cap = replace(CFG, bucket_cap=20)
-    want = {
-        (r.a, r.b) for r in candidate_pairs(buckets, cfg_cap, mode="all").collect()
-    }
-    got = {(r.a, r.b) for r in candidate_pairs_local(buckets, cfg_cap).collect()}
+    want_cap = _co_bucket_pairs(buckets, 20)
+    assert want_cap < want
+    for salt in SALTS:
+        got = _pairs(candidate_pairs(buckets, cfg_cap, salt_threshold=salt))
+        assert got == want_cap, salt
+
+
+def _sized_buckets(spark, sizes):
+    """One bucket per size, members with ids unique across buckets, so
+    every pair comes from exactly one bucket."""
+    rows, nxt = [], 0
+    for key, m in enumerate(sizes):
+        rows += [(key, nxt + i) for i in range(m)]
+        nxt += m
+    return spark.createDataFrame(rows, "band_hash long, doc_id long")
+
+
+@contextlib.contextmanager
+def _arrow_batch_rows(spark, n):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_bucket_straddles_arrow_batches(spark):
+    # 7-row Arrow batches: most buckets run over one or several batch
+    # edges, and each is carried across them whole
+    from dataclasses import replace
+
+    buckets = _sized_buckets(spark, [1, 2, 3, 6, 7, 8, 15, 23, 40, 2, 1, 9])
+    cfg = replace(CFG, bucket_cap=100)
+    want = _co_bucket_pairs(buckets, 100)
+    with _arrow_batch_rows(spark, 7):
+        for salt in SALTS:
+            got = _pairs(candidate_pairs(buckets, cfg, salt_threshold=salt))
+            assert got == want, salt
+
+
+def test_over_cap_bucket_across_batches_dropped_whole(spark):
+    # the 30- and 45-member buckets pass cap=20 several batches in; none of
+    # their pairs may leak out, and the buckets after them are kept
+    from dataclasses import replace
+
+    buckets = _sized_buckets(spark, [5, 30, 4, 45, 20, 3])
+    cfg = replace(CFG, bucket_cap=20)
+    want = _co_bucket_pairs(buckets, 20)
+    assert len(want) == 10 + 6 + 190 + 3
+    with _arrow_batch_rows(spark, 7):
+        for salt in SALTS:
+            got = _pairs(candidate_pairs(buckets, cfg, salt_threshold=salt))
+            assert got == want, salt
+
+
+def test_candidate_pairs_empty_partitions(spark):
+    # one two-member bucket leaves every other partition of the kernel
+    # stage empty; singleton-only and empty tables give no pairs
+    one = spark.createDataFrame([(9, 4), (9, 2)], "band_hash long, doc_id long")
+    assert _pairs(candidate_pairs(one, CFG)) == {(2, 4)}
+    singles = _sized_buckets(spark, [1] * 50)
+    assert _pairs(candidate_pairs(singles, CFG)) == set()
+    empty = spark.createDataFrame([], "band_hash long, doc_id long")
+    assert _pairs(candidate_pairs(empty, CFG)) == set()
+
+
+def test_candidate_pairs_rejects_ranked_table(spark):
+    one = spark.createDataFrame([(9, 4), (9, 2)], "band_hash long, doc_id long")
+    with pytest.raises(ValueError):
+        candidate_pairs(one, CFG, ranked=one)
+
+
+def test_block_rows_holds_one_batch_plus_one_bucket(monkeypatch):
+    # driver-side: the kernel over a list of band_hash-sorted frames, with
+    # buckets straddling frame edges, over-cap buckets and empty frames.
+    # The rows it holds when each frame arrives (the carried bucket plus
+    # the frame) never exceed one batch plus bucket_cap, and no output
+    # frame holds much more than FRAME_IDS member ids.
+    import pandas as pd
+
+    from smqtk_indexing_spark.operators import candidates as C
+
+    rng = np.random.default_rng(5)
+    sizes = rng.integers(1, 90, 60).tolist() + [400, 1, 250]
+    # grouped by band_hash, members in no particular order (the stage
+    # sorts on band_hash alone)
+    bh = np.repeat(np.arange(len(sizes)), sizes)
+    did = rng.permutation(len(bh))
+    batch, cap, salt = 32, 300, 16
+    frames = [
+        pd.DataFrame({"band_hash": bh[i : i + batch], "doc_id": did[i : i + batch]})
+        for i in range(0, len(bh), batch)
+    ]
+    frames.insert(3, frames[0].iloc[:0])
+    want = set()
+    for key, m in enumerate(sizes):
+        if 2 <= m <= cap:
+            want |= set(itertools.combinations(sorted(did[bh == key]), 2))
+
+    tail = C.BucketTail()
+    held = []
+
+    def feed():
+        for f in frames:
+            held.append(tail.rows + len(f))
+            yield f
+
+    monkeypatch.setattr(C, "FRAME_IDS", 2_000)
+    got = set()
+    for out in C.block_frames(C.block_rows(feed(), salt, cap, tail)):
+        ids = sum(len(a) + len(b) for a, b in zip(out["ba"], out["bb"]))
+        assert ids < C.FRAME_IDS + 2 * salt
+        for a, b, same in out.itertuples(index=False):
+            got |= {
+                (min(x, y), max(x, y)) for x in a for y in b if not same or x < y
+            }
+    assert len(held) == len(frames)
+    assert max(held) <= batch + cap
+    assert tail.rows == 0
     assert got == want
 
 

@@ -101,25 +101,18 @@ def test_dup_pair_recall_and_clusters(spark, corpus, tmp_path_factory):
 
 
 def test_checkpoint_resume_and_lineage(spark, corpus, tmp_path):
-    from dataclasses import replace
-
     files, _ = corpus
     df = spark.createDataFrame(files.head(200))
     out = str(tmp_path / "ckpt")
-    # pin the ranked-hot-bucket gate OPEN so the hot_buckets stage and its
-    # resume path stay covered at test scale (production gates it on
-    # cfg.ranked_persist_min_docs — see the gated-off check below)
-    cfg = replace(CFG, ranked_persist_min_docs=0)
-    r1 = run_dedup(spark, df, cfg, out_dir=out)
+    r1 = run_dedup(spark, df, CFG, out_dir=out)
     assert all(not row[5] for row in r1.lineage)  # nothing resumed
     assert os.path.exists(os.path.join(out, "clusters", "_SUCCESS"))
     stages = [row[0] for row in r1.lineage]
     assert stages == [
-        "signatures", "member_map", "hot_buckets", "cand_pairs",
-        "dup_pairs", "clusters",
+        "signatures", "member_map", "cand_pairs", "dup_pairs", "clusters",
     ]
 
-    r2 = run_dedup(spark, df, cfg, out_dir=out)
+    r2 = run_dedup(spark, df, CFG, out_dir=out)
     assert all(row[5] for row in r2.lineage)  # everything resumed
     c1 = {(r.doc_id, r.cluster_id) for r in r1.tables["clusters"].collect()}
     c2 = {(r.doc_id, r.cluster_id) for r in r2.tables["clusters"].collect()}
@@ -128,13 +121,6 @@ def test_checkpoint_resume_and_lineage(spark, corpus, tmp_path):
     # config change refuses to reuse the checkpoint dir
     with pytest.raises(ValueError):
         run_dedup(spark, df, DedupConfig(seed=999), out_dir=out)
-
-    # below the gate (default config: 200 docs < ranked_persist_min_docs)
-    # the hot_buckets stage is skipped and clusters are unchanged
-    r3 = run_dedup(spark, df, CFG)
-    assert "hot_buckets" not in [row[0] for row in r3.lineage]
-    c3 = {(r.doc_id, r.cluster_id) for r in r3.tables["clusters"].collect()}
-    assert c3 == c1
 
 
 def test_lineage_df_schema(spark, corpus):
@@ -145,7 +131,6 @@ def test_lineage_df_schema(spark, corpus):
     assert set(ldf.columns) == {
         "stage", "rows_out", "n_partitions", "wall_ms", "config_hash", "resumed"
     }
-    # 5 stages: hot_buckets is size-gated off below ranked_persist_min_docs
     assert ldf.count() == 5
 
 

@@ -87,9 +87,4 @@ def test_skip_active_inside_task(spark):
 
 def test_python_stage_width(spark):
     cores = spark.sparkContext.defaultParallelism
-    bound = session.PYTHON_STAGE_ROWS_PER_TASK
     assert session.python_stage_width(spark) == cores
-    assert session.python_stage_width(spark, 0) == cores
-    assert session.python_stage_width(spark, cores * bound) == cores
-    assert session.python_stage_width(spark, cores * bound + 1) == cores + 1
-    assert session.python_stage_width(spark, 10 * cores * bound) == 10 * cores

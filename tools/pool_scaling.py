@@ -382,8 +382,8 @@ A/Bs at steal < 0.1%, 800k corpus): signatures 59.2 s -> 15.9 s (0.93),
 dup_pairs 38.2 -> 11.4 (0.84), member_map 1.2 -> 0.7. The one stage
 that read below the gate in round 5 — cand_pairs, 20.9 -> 6.7 (0.78
 raw) — was re-attributed in round 6 with an ISOLATED stage A/B carrying
-its own stage-level floor probes (tools/cand_stage_ab.py over the
-pre-materialized 800k bucket table; 3 interleaved rounds x 4 variants,
+its own stage-level floor probes (over the pre-materialized 800k
+bucket table; 3 interleaved rounds x 4 variants,
 BENCH/cand_ab_20260817_200213.json): the non-scaling term was the AQE
 broadcast join-back, whose hash relation is built serially on the
 driver. The production form is now a forced shuffle-hash join-back
