@@ -27,13 +27,9 @@ from smqtk_indexing_spark.operators import ann, dedup
 from smqtk_indexing_spark.operators.candidates import band_buckets, candidate_pairs
 from smqtk_indexing_spark.operators.cluster import connected_components
 from smqtk_indexing_spark.operators.multimodal import extract_features, to_assets
-from smqtk_indexing_spark.operators.signatures import (
-    compute_shingle_arrays,
-    compute_signatures,
-)
+from smqtk_indexing_spark.operators.signatures import compute_signatures
 from smqtk_indexing_spark.operators.substrings import substring_pairs
-from smqtk_indexing_spark.operators.verify import verify_pairs
-from smqtk_indexing_spark.session import python_stage_width
+from smqtk_indexing_spark.operators.verify import verify_candidates
 
 CFG = DedupConfig()
 K = CFG.shingle_k
@@ -190,15 +186,17 @@ def _memo_evict_stopped() -> None:
 
 
 def _lsh_pairs(spark, sf_dir, materialize: bool = True):
-    # Lean dataflow (same shape as plans/pipeline.py:152-175): the signature
-    # pass carries ONLY band keys (~300 B/doc); shingle arrays are computed a
-    # second time for CANDIDATE docs only, instead of Arrow-shipping every
-    # doc's full shingle set through the whole DAG. ``cand`` feeds both the
-    # id fetch and the verify join, so it is persisted — without it the full
-    # tokenize+minhash mapInPandas pass re-runs once per DAG branch (~3x the
-    # signature cost, the round-1 near_dup_pairs_lsh bottleneck).
-    # ``materialize=False`` returns the PURE LAZY plan (no persist, no
-    # checkpoint, no memo) — for plan capture (tools/explain_plans.py).
+    # Lean dataflow (same stages as plans/pipeline.py run_dedup): the
+    # signature pass carries ONLY band keys (~300 B/doc); shingle arrays are
+    # computed a second time for CANDIDATE docs only (verify_candidates),
+    # instead of Arrow-shipping every doc's full shingle set through the
+    # whole DAG. ``cand`` feeds both the id fetch and the verify join, so it
+    # is persisted — without it the full tokenize+minhash mapInPandas pass
+    # re-runs once per DAG branch (~3x the signature cost, the round-1
+    # near_dup_pairs_lsh bottleneck). ``materialize=False`` returns the PURE
+    # LAZY plan (no persist, no checkpoint, no memo, and no corpus count
+    # job, so the fetch is the broadcast one) — for plan capture
+    # (tools/explain_plans.py).
     _memo_evict_stopped()
     key = _memo_key(spark, sf_dir)
     hit = _PAIR_MEMO.get(key) if materialize else None
@@ -206,56 +204,23 @@ def _lsh_pairs(spark, sf_dir, materialize: bool = True):
         return hit
     docs = _docs(spark, sf_dir)
     sigs = compute_signatures(docs, CFG, include=("bands",))
-    buckets = band_buckets(sigs, CFG)
-    sh = None
-    # (plan capture runs no count job and takes the broadcast fetch below)
-    n_docs = _docs_count(spark, sf_dir) if materialize else None
-    cand = candidate_pairs(buckets, CFG, mode="all")
-    if materialize:
-        cand = cand.persist()
+    cand = candidate_pairs(band_buckets(sigs, CFG), CFG, mode="all")
+    if not materialize:
+        return verify_candidates(cand, docs, CFG, None, None)
+    cand = cand.persist()
+    caches = [cand]
     try:
-        cand_ids = (
-            cand.select(F.col("a").alias("doc_id"))
-            .unionAll(cand.select(F.col("b").alias("doc_id")))
-            .distinct()
-        )
-        # Size-gated content fetch, same rule as the pipeline twin
-        # (plans/pipeline.py build_dup_pairs): under cfg.broadcast_id_cap
-        # docs, broadcast the id set so content never leaves its scan
-        # partitions; above it, shuffle-hash + core-count repartition.
-        # The shingle persist below is BEST-EFFORT: everything here
-        # materializes in one localCheckpoint action, and two concurrent
-        # branch stages can race past an un-counted cache (each computing
-        # the pass once — the pre-persist behavior, no worse). The
-        # pipeline twin materializes eagerly with .count() instead,
-        # because there the pass is the measured multi-second cost
-        # (9.0 s -> 1.8 s); at driver-query SF the pass is ~0.3 s and the
-        # extra eager jobs cost more than the race loses (A/B measured:
-        # lazy 2.6 s vs eager 3.1 s per query).
-        if n_docs is None or n_docs <= CFG.broadcast_id_cap:
-            # (plan capture takes the broadcast branch without the count job)
-            cand_docs = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        else:
-            cand_docs = docs.join(
-                cand_ids.hint("shuffle_hash"), "doc_id", "left_semi"
-            ).repartition(python_stage_width(spark))
-        sh = compute_shingle_arrays(cand_docs, CFG)
-        if materialize:
-            sh = sh.persist()
-        out = verify_pairs(cand, sh, CFG)
-        if not materialize:
-            return out
-        # materialize the (small, tau-filtered) pair set NOW so the big
-        # candidate cache is released before returning — no cached
-        # intermediates survive a queries() run (round-2 VERDICT item 8)
-        out = out.localCheckpoint(eager=True)
+        # materialize the (small, tau-filtered) pair set NOW so the caches
+        # are released before returning — no cached intermediates survive a
+        # queries() run (round-2 VERDICT item 8)
+        out = verify_candidates(
+            cand, docs, CFG, _docs_count(spark, sf_dir), caches
+        ).localCheckpoint(eager=True)
         _PAIR_MEMO[key] = out
         return out
     finally:
-        if materialize:
-            cand.unpersist()
-            if sh is not None:
-                sh.unpersist()
+        for c in caches:
+            c.unpersist()
 
 
 def q_near_dup_pairs_lsh(spark, sf_dir):

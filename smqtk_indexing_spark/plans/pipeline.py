@@ -29,12 +29,9 @@ from smqtk_indexing_spark.config import DedupConfig
 from smqtk_indexing_spark.operators import dedup as X
 from smqtk_indexing_spark.operators.candidates import band_buckets, candidate_pairs
 from smqtk_indexing_spark.operators.cluster import connected_components
-from smqtk_indexing_spark.operators.signatures import (
-    compute_shingle_arrays,
-    compute_signatures,
-)
+from smqtk_indexing_spark.operators.signatures import compute_signatures
 from smqtk_indexing_spark.operators.substrings import substring_pairs
-from smqtk_indexing_spark.operators.verify import verify_pairs
+from smqtk_indexing_spark.operators.verify import verify_candidates
 from smqtk_indexing_spark.session import python_stage_width
 
 LINEAGE_SCHEMA = (
@@ -156,6 +153,26 @@ class Checkpointer:
         return df
 
 
+def _rep_ids(member_map: DataFrame, n_docs: int, cfg: DedupConfig) -> DataFrame:
+    """Exact-dup representative ids, broadcast while the corpus is under the
+    byte-bounded ``cfg.broadcast_id_cap`` so the lean signature table never
+    shuffles for the representative semi-join (measured: cand stage -1.5 s
+    at local[2] on 800k docs)."""
+    reps_ids = member_map.where(F.col("doc_id") == F.col("rep_id")).select("doc_id")
+    return F.broadcast(reps_ids) if n_docs <= cfg.broadcast_id_cap else reps_ids
+
+
+def _clusters(edges: DataFrame, member_map: DataFrame) -> DataFrame:
+    """Connected components over ``edges`` ∪ the exact-dup member -> rep
+    edges, with every corpus doc_id as a node."""
+    exact_edges = member_map.where(F.col("doc_id") != F.col("rep_id")).select(
+        F.col("doc_id").alias("a"), F.col("rep_id").alias("b")
+    )
+    return connected_components(
+        edges.unionByName(exact_edges), nodes=member_map.select("doc_id")
+    )
+
+
 def run_dedup(
     spark: SparkSession,
     files: DataFrame,
@@ -202,96 +219,27 @@ def run_dedup(
         ),
         res,
     )
-    # a signature checkpoint resumed from a pre-r5 run lacks the sha256
-    # column; fall back to the standalone content scan rather than fail
-    # the resume (the config_hash guard does not encode stage schemas)
-    mm_build = (
-        (lambda: X.member_map_from_sigs(sigs_all))
-        if "sha256" in sigs_all.columns
-        else (lambda: X.member_map(base))
-    )
-    member_map = ck.run("member_map", mm_build, res)
+    member_map = ck.run("member_map", lambda: X.member_map_from_sigs(sigs_all), res)
     n_docs = res.lineage[-1][1]  # member_map rows == corpus rows
-    reps_ids = member_map.where(F.col("doc_id") == F.col("rep_id")).select("doc_id")
-    # representative filter: broadcast the id set while the corpus is under
-    # the byte-bounded cap so the lean signature table never shuffles for
-    # this semi-join (measured: cand stage -1.5 s at local[2] on 800k docs)
-    if n_docs <= cfg.broadcast_id_cap:
-        reps_ids = F.broadcast(reps_ids)
+    reps_ids = _rep_ids(member_map, n_docs, cfg)
     sigs = sigs_all.join(reps_ids, "doc_id", "left_semi")
 
-    buckets = band_buckets(sigs, cfg)
-    cand = ck.run("cand_pairs", lambda: candidate_pairs(buckets, cfg), res)
-
-    def build_dup_pairs() -> DataFrame:
-        cand_ids = (
-            cand.select(F.col("a").alias("doc_id"))
-            .unionAll(cand.select(F.col("b").alias("doc_id")))
-            .distinct()
-        )
-        # Content fetch strategy is SIZE-GATED on the corpus row count
-        # (known for free from the member_map lineage row; cand_ids is a
-        # subset of doc ids so it is bounded by it): under
-        # cfg.broadcast_id_cap the id set is BROADCAST and the content
-        # rows never leave their scan partitions — no exchange, no
-        # repartition (scan splits already give several waves per core,
-        # session.py maxPartitionBytes). Above the cap: shuffle-hash join
-        # (build side = ids, content side never sorted; SMJ would
-        # sort/spill it) + a repartition to python_stage_width (one task
-        # per core; the Arrow pass streams its batches, so the width does
-        # not grow with the corpus), because UDF stages need partition
-        # counts that follow CORES, not bytes — the semi-join output's
-        # byte-sized partitioning starves / skews the Arrow pass (measured
-        # round 4 at local[8]: 9.3 s on the join's 16 partitions vs 4.3 s
-        # repartitioned to 4 waves per core; the single wave has not been
-        # measured at that scale).
-        n_docs = next(
-            (row[1] for row in res.lineage if row[0] == "member_map"), None
-        )
-        if n_docs is not None and n_docs <= cfg.broadcast_id_cap:
-            cand_docs = base.join(
-                F.broadcast(cand_ids), "doc_id", "left_semi"
-            )
-        else:
-            cand_docs = base.join(
-                cand_ids.hint("shuffle_hash"), "doc_id", "left_semi"
-            ).repartition(python_stage_width(spark))
-        # Materialization boundary between the content exchange and the
-        # Arrow shingle pass (round-2 VERDICT item 4): fused, the stage
-        # runs every core's JVM shuffle task AND its python worker
-        # concurrently — 2x runnable threads per core — which anti-scales
-        # once task slots cover all vCPUs (measured on the 800k-file
-        # corpus: fused 6.9 s at local[8] but 24.0 s at local[32];
-        # decomposed 8.3 s / 9.8 s). persist + count (not
-        # localCheckpoint): same eager boundary, but unpersist() actually
-        # releases cache-manager blocks (ADVICE r3).
-        cand_docs = cand_docs.persist()
-        cand_docs.count()
-        # persist + materialize the SHINGLE table too: it feeds BOTH
-        # sides of the verify join, and an unpersisted frame re-runs the
-        # whole Arrow pass once per branch (measured round 4: verify join
-        # 9.0 s -> 1.8 s with the pass cached)
-        shingle_df = compute_shingle_arrays(cand_docs, cfg).persist()
-        shingle_df.count()
-        caches.extend((cand_docs, shingle_df))
-        # returned LAZY: ck.run's checkpoint+count materializes the small
-        # tau-filtered result in one job, then the cleanup below releases
-        # the caches it depended on (an eager checkpoint here would
-        # re-materialize the same rows a second time inside ck.run)
-        return verify_pairs(cand, shingle_df, cfg)
-
+    cand = ck.run(
+        "cand_pairs", lambda: candidate_pairs(band_buckets(sigs, cfg), cfg), res
+    )
     caches: list = []
     pairs = ck.run(
         "dup_pairs",
-        build_dup_pairs,
+        lambda: verify_candidates(cand, base, cfg, n_docs, caches),
         res,
         cleanup=lambda: [c.unpersist() for c in caches],
     )
 
+    edges = pairs.select("a", "b")
     if include_substrings:
         reps = base.join(reps_ids, "doc_id", "left_semi")
         sub_caches: list = []
-        ck.run(
+        substr = ck.run(
             "substr_pairs",
             lambda: substring_pairs(
                 reps, cfg, id_col="doc_id", text_col="text", mode="rarest",
@@ -300,23 +248,11 @@ def run_dedup(
             res,
             cleanup=lambda: [c.unpersist() for c in sub_caches],
         )
-
-    def build_clusters() -> DataFrame:
-        edges = pairs.select("a", "b")
-        exact_edges = member_map.where(F.col("doc_id") != F.col("rep_id")).select(
-            F.col("doc_id").alias("a"), F.col("rep_id").alias("b")
+        edges = edges.unionByName(
+            substr.select(F.col("inner").alias("a"), F.col("outer").alias("b"))
         )
-        if include_substrings:
-            edges = edges.unionByName(
-                res.tables["substr_pairs"].select(
-                    F.col("inner").alias("a"), F.col("outer").alias("b")
-                )
-            )
-        all_edges = edges.unionByName(exact_edges)
-        nodes = member_map.select("doc_id")
-        return connected_components(all_edges, nodes=nodes)
 
-    ck.run("clusters", build_clusters, res)
+    ck.run("clusters", lambda: _clusters(edges, member_map), res)
     return res
 
 
@@ -334,87 +270,78 @@ def update_dedup(
     pairs are generated ONLY where a new document shares a bucket; old
     verified pairs are reused and clustering merges the union.
 
+    It runs run_dedup's five stages under the same names through an
+    in-memory :class:`Checkpointer`, so the result carries one lineage row
+    per stage. The signature and pair unions are coalesced to
+    :func:`python_stage_width`, so their partition counts do not grow
+    across chained appends.
+
     ``all_files``: the post-append corpus. ``new_ids``: single-column
     DataFrame of newly appended doc ids. ``prior``: result of the previous
     run_dedup/update_dedup over the pre-append corpus.
     """
     cfg = cfg or DedupConfig()
+    ck = Checkpointer(spark, None, cfg)
     res = PipelineResult()
+    width = python_stage_width(spark)
     base = all_files.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
     new_ids = new_ids.select(F.col(new_ids.columns[0]).cast("long").alias("doc_id"))
-    new_docs = base.join(new_ids, "doc_id", "left_semi")
 
+    old_sigs = prior.tables["signatures"]
+    if "sha256" not in old_sigs.columns:
+        raise ValueError(
+            "prior signatures table has no sha256 column; rebuild it with "
+            "run_dedup"
+        )
+    old_ids = old_sigs.select("doc_id")
     # signatures: prior table + one vectorized pass over the new batch only;
     # ids already indexed are skipped (duplicate-insert warn+skip contract,
     # reference impls/nn_index/faiss.py:590-598)
-    old_sigs = prior.tables["signatures"]
-    # pre-r5 checkpoint compatibility (mirrors run_dedup's fallback, ADVICE
-    # r5): a signatures table resumed from a checkpoint predating the sha256
-    # column would make the unionByName below fail — and allowMissingColumns
-    # would silently feed null shas into member_map_from_sigs. Backfill the
-    # prior corpus' shas with ONE content pass instead (the same cost
-    # run_dedup's member_map fallback pays on such checkpoints).
-    if "sha256" not in old_sigs.columns:
-        old_shas = X.with_sha256(
-            base.join(old_sigs.select("doc_id"), "doc_id", "left_semi")
-        ).select("doc_id", "sha256")
-        old_sigs = old_sigs.join(old_shas, "doc_id")
-    new_docs = new_docs.join(old_sigs.select("doc_id"), "doc_id", "left_anti")
-    new_sigs = compute_signatures(
-        new_docs, cfg, include=("simhash", "bands", "sha256")
+    new_docs = base.join(new_ids, "doc_id", "left_semi").join(
+        old_ids, "doc_id", "left_anti"
     )
-    sigs_all = old_sigs.unionByName(new_sigs).localCheckpoint(eager=True)
-    res.tables["signatures"] = sigs_all
-
+    sigs_all = ck.run(
+        "signatures",
+        lambda: old_sigs.unionByName(
+            compute_signatures(new_docs, cfg, include=("simhash", "bands", "sha256"))
+        ).coalesce(width),
+        res,
+    )
     # exact-dup map over the whole corpus from the LEAN signature union —
     # content is scanned only for the new batch, never re-scanned for the
     # prior corpus (same single-scan contract as run_dedup)
-    mm = X.member_map_from_sigs(sigs_all).localCheckpoint(eager=True)
-    res.tables["member_map"] = mm
-    reps_ids = mm.where(F.col("doc_id") == F.col("rep_id")).select("doc_id")
-    sigs = sigs_all.join(reps_ids, "doc_id", "left_semi")
+    member_map = ck.run("member_map", lambda: X.member_map_from_sigs(sigs_all), res)
+    n_docs = res.lineage[-1][1]
+    sigs = sigs_all.join(_rep_ids(member_map, n_docs, cfg), "doc_id", "left_semi")
 
-    # candidate pairs touching at least one NEW doc: semi-join the bucket
-    # table to buckets that gained a new member, then pair-generate only
-    # within those buckets
-    buckets = band_buckets(sigs, cfg)
-    new_rep_ids = new_ids.join(reps_ids, "doc_id", "left_semi")
-    touched = (
-        band_buckets(new_sigs.join(new_rep_ids, "doc_id", "left_semi"), cfg)
-        .select("band_hash")
-        .distinct()
-    )
-    touched_buckets = buckets.join(touched, "band_hash", "left_semi")
-    cand = candidate_pairs(touched_buckets, cfg)
-    # drop pairs already verified last round (old x old in a touched bucket)
-    cand_new = cand.join(
-        prior.tables["dup_pairs"].select("a", "b"), ["a", "b"], "left_anti"
-    ).localCheckpoint(eager=True)
-    res.tables["cand_pairs"] = cand_new
+    # candidate pairs touching at least one NEW representative: semi-join
+    # the bucket table to buckets that gained one, pair-generate only within
+    # those, and drop pairs verified last round (old x old in a touched
+    # bucket) — so the new pairs are disjoint from the prior ones
+    prior_pairs = prior.tables["dup_pairs"].select("a", "b", "jaccard")
 
-    cand_ids = (
-        cand_new.select(F.col("a").alias("doc_id"))
-        .unionAll(cand_new.select(F.col("b").alias("doc_id")))
-        .distinct()
-    )
-    cand_docs = base.join(cand_ids.hint("shuffle_hash"), "doc_id", "left_semi")
-    shingle_df = compute_shingle_arrays(cand_docs, cfg)
-    new_pairs = verify_pairs(cand_new, shingle_df, cfg)
-    pairs = (
-        prior.tables["dup_pairs"].select("a", "b", "jaccard")
-        .unionByName(new_pairs)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    res.tables["dup_pairs"] = pairs
+    def build_cand() -> DataFrame:
+        touched = (
+            band_buckets(sigs.join(old_ids, "doc_id", "left_anti"), cfg)
+            .select("band_hash")
+            .distinct()
+        )
+        buckets = band_buckets(sigs, cfg).join(touched, "band_hash", "left_semi")
+        return candidate_pairs(buckets, cfg).join(
+            prior_pairs.select("a", "b"), ["a", "b"], "left_anti"
+        )
 
-    exact_edges = mm.where(F.col("doc_id") != F.col("rep_id")).select(
-        F.col("doc_id").alias("a"), F.col("rep_id").alias("b")
+    cand = ck.run("cand_pairs", build_cand, res)
+    caches: list = []
+    pairs = ck.run(
+        "dup_pairs",
+        lambda: prior_pairs.unionByName(
+            verify_candidates(cand, base, cfg, n_docs, caches)
+        ).coalesce(width),
+        res,
+        cleanup=lambda: [c.unpersist() for c in caches],
     )
-    clusters = connected_components(
-        pairs.select("a", "b").unionByName(exact_edges), nodes=mm.select("doc_id")
-    )
-    res.tables["clusters"] = clusters.localCheckpoint(eager=True)
+    ck.run("clusters", lambda: _clusters(pairs.select("a", "b"), member_map), res)
     return res

@@ -105,11 +105,12 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
         )
         # 64m broadcast threshold for AQE re-planning ONLY (Spark's 10m
-        # default assumes ~1 GB executors): the hot-bucket size table
-        # (~1M rows / 17 MB on the 800k bench corpus) then broadcasts
-        # instead of re-exchanging the 24M-row bucket-membership table a
-        # second time (measured at local[2], quiet window: cand stage
-        # 27 s -> 21.5 s). Scoped to spark.sql.adaptive.* (ADVICE r5): the
+        # default assumes ~1 GB executors). It was sized for a hot-bucket
+        # size table the candidate stage no longer builds; what it still
+        # covers is any join whose runtime build side lands between 10m
+        # and 64m — the verify join's shingle side, update_dedup's
+        # touched-bucket and prior-pair joins — and its effect on those
+        # is unmeasured. Scoped to spark.sql.adaptive.* (ADVICE r5): the
         # STATIC threshold keeps Spark's default, because static planning
         # sizes relations from compressed on-disk estimates — a ~64 MB
         # parquet estimate can decompress to several hundred MB per

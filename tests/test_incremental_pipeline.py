@@ -3,18 +3,30 @@ incrementally, and verify cluster equivalence with a from-scratch run over
 the full corpus (reference state-transition pattern: additive-update
 invariants, tests/impls/nn_index/test_faiss.py:197-226 analog)."""
 
+from dataclasses import replace
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from smqtk_indexing_spark.config import DedupConfig
 from smqtk_indexing_spark.plans.pipeline import run_dedup, update_dedup
+from smqtk_indexing_spark.session import python_stage_width
 from smqtk_indexing_spark.sources.files import synth_files
 
 CFG = DedupConfig()
 
+STAGES = ["signatures", "member_map", "cand_pairs", "dup_pairs", "clusters"]
 
-def test_incremental_update_equals_full_rebuild(spark):
+
+# broadcast_id_cap=0 takes the above-cap branches: the shuffle-hash content
+# fetch and the unbroadcast representative filter
+@pytest.mark.parametrize(
+    "cap", [CFG.broadcast_id_cap, 0], ids=["broadcast", "shuffle_hash"]
+)
+def test_incremental_update_equals_full_rebuild(spark, cap):
+    cfg = replace(CFG, broadcast_id_cap=cap)
     files, _ = synth_files(n=500, seed=23)
     full_df = spark.createDataFrame(files)
     first = spark.createDataFrame(files.iloc[:350])
@@ -22,9 +34,9 @@ def test_incremental_update_equals_full_rebuild(spark):
         [(int(i),) for i in files.iloc[350:]["doc_id"]], "doc_id long"
     )
 
-    prior = run_dedup(spark, first, CFG)
-    updated = update_dedup(spark, full_df, new_ids, prior, CFG)
-    scratch = run_dedup(spark, full_df, CFG)
+    prior = run_dedup(spark, first, cfg)
+    updated = update_dedup(spark, full_df, new_ids, prior, cfg)
+    scratch = run_dedup(spark, full_df, cfg)
 
     inc_clusters = {
         (r.doc_id, r.cluster_id) for r in updated.tables["clusters"].collect()
@@ -45,28 +57,38 @@ def test_incremental_update_equals_full_rebuild(spark):
 
 
 def test_incremental_update_from_sha_less_prior(spark):
-    """Resume compatibility (ADVICE r5): a prior whose signatures
-    checkpoint predates the sha256 column must be backfilled (one content
-    pass over the prior corpus), not crash the unionByName or feed null
-    shas into the exact-dup map."""
-    files, _ = synth_files(n=400, seed=31)
+    """A prior whose signatures table lacks the sha256 column (written
+    before the signature pass carried it) is refused with a named error."""
+    files, _ = synth_files(n=120, seed=31)
     full_df = spark.createDataFrame(files)
-    first = spark.createDataFrame(files.iloc[:280])
+    first = spark.createDataFrame(files.iloc[:80])
     new_ids = spark.createDataFrame(
-        [(int(i),) for i in files.iloc[280:]["doc_id"]], "doc_id long"
+        [(int(i),) for i in files.iloc[80:]["doc_id"]], "doc_id long"
     )
     prior = run_dedup(spark, first, CFG)
-    # simulate the pre-r5 checkpoint schema
     prior.tables["signatures"] = prior.tables["signatures"].drop("sha256")
+    with pytest.raises(ValueError, match="sha256"):
+        update_dedup(spark, full_df, new_ids, prior, CFG)
 
-    updated = update_dedup(spark, full_df, new_ids, prior, CFG)
-    scratch = run_dedup(spark, full_df, CFG)
-    inc = {(r.doc_id, r.cluster_id) for r in updated.tables["clusters"].collect()}
-    full = {(r.doc_id, r.cluster_id) for r in scratch.tables["clusters"].collect()}
-    assert inc == full
-    sigs = updated.tables["signatures"]
-    assert "sha256" in sigs.columns
-    assert sigs.where(F.col("sha256").isNull()).count() == 0
+
+def test_update_lineage_rows(spark):
+    """update_dedup records one lineage row per stage, under run_dedup's
+    stage names, and each rows_out is its stage table's row count."""
+    files, _ = synth_files(n=300, seed=37)
+    prior = run_dedup(spark, spark.createDataFrame(files.iloc[:200]), CFG)
+    new_ids = spark.createDataFrame(
+        [(int(i),) for i in files.iloc[200:]["doc_id"]], "doc_id long"
+    )
+    updated = update_dedup(
+        spark, spark.createDataFrame(files), new_ids, prior, CFG
+    )
+    assert [row[0] for row in updated.lineage] == STAGES
+    assert [row[0] for row in prior.lineage] == STAGES
+    for stage, rows_out, n_partitions, *_ in updated.lineage:
+        table = updated.tables[stage]
+        assert rows_out == table.count(), stage
+        assert n_partitions == table.rdd.getNumPartitions(), stage
+    assert updated.lineage[0][1] == 300  # one signature row per doc
 
 
 def test_incremental_update_signature_counts(spark):
@@ -142,6 +164,10 @@ def test_chained_updates_equal_scratch_after_every_step(spark):
         }
         assert inc == full
         assert len(inc) == len(corpus)
+        # the signature and pair unions do not add partitions per append
+        width = python_stage_width(spark)
+        for stage in ("signatures", "dup_pairs"):
+            assert res.tables[stage].rdd.getNumPartitions() <= width, stage
     # every copy and variant landed in its source's cluster
     labels = dict(inc)
     for d in family:
